@@ -25,6 +25,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import clean_text, doc_fingerprint, tokens
+from ..plans.cache_registry import track
 from .joins import broadcast_if_dim
 
 
@@ -253,7 +254,6 @@ def minhash_dedup_pairs(
     bands: int = 8,
     shingle_n: int = 3,
     max_bucket_size: int | None = None,
-    eager: bool = False,
 ) -> DataFrame:
     """D3 — near-dup pairs via MinHash + LSH banding, verified exactly.
 
@@ -274,20 +274,10 @@ def minhash_dedup_pairs(
     contract for capped runs: :func:`exact_dedup` runs FIRST, so
     surviving near-dup buckets are genuinely small; capping then only
     sheds pathological boilerplate clusters, never normal near-dups.
-
-    ``eager=True`` materializes the result and releases the internal
-    LSH-index/shingle-set caches immediately (see
-    :func:`..caching.materialize_and_release`); the returned DataFrame
-    is then persisted and owned by the caller.
     """
-    verified, _report, caches = _minhash_core(
+    return _minhash_core(
         df, text_col, id_col, threshold, num_hashes, bands, shingle_n, max_bucket_size
-    )
-    if eager:
-        from .caching import materialize_and_release
-
-        return materialize_and_release(verified, caches)
-    return verified
+    )[0]
 
 
 def minhash_dedup_pairs_with_report(
@@ -299,7 +289,6 @@ def minhash_dedup_pairs_with_report(
     num_hashes: int = 32,
     bands: int = 8,
     shingle_n: int = 3,
-    eager: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
     """Capped MinHash dedup plus its dropped-mass report, from ONE
     banded index: returns ``(pairs, hot_buckets)`` where ``pairs`` is
@@ -309,22 +298,10 @@ def minhash_dedup_pairs_with_report(
     because both are derived from the same ``_minhash_banded`` table.
     This is the production entry point for capped runs: the cap is never
     silent, and the report can never describe different buckets than the
-    join skipped. ``eager=True`` materializes BOTH outputs then releases
-    the internal index caches; the returned DataFrames are persisted and
-    caller-owned."""
-    verified, report, caches = _minhash_core(
+    join skipped."""
+    return _minhash_core(
         df, text_col, id_col, threshold, num_hashes, bands, shingle_n, max_bucket_size
     )
-    if eager:
-        from .caching import materialize_and_release
-
-        report = report.persist()
-        verified = materialize_and_release(verified, [])
-        report.count()
-        for c in caches:
-            c.unpersist()
-        return verified, report
-    return verified, report
 
 
 def _minhash_core(
@@ -336,22 +313,21 @@ def _minhash_core(
     bands: int,
     shingle_n: int,
     max_bucket_size: int | None,
-) -> tuple[DataFrame, DataFrame | None, list[DataFrame]]:
+) -> tuple[DataFrame, DataFrame | None]:
     """Shared pipeline behind the pair join and the hot-bucket report.
 
-    Returns (verified_pairs, hot_report_or_None, persisted_intermediates).
-    The persisted list is surfaced so callers that materialize the result
-    eagerly can unpersist the index afterwards (see SCALING.md's cache
+    Returns (verified_pairs, hot_report_or_None). The banded index and
+    the shingle sets are persisted through ``track``, so
+    ``release_session_caches()`` frees them (SCALING.md's cache
     contract)."""
     # The banded table is the LSH index: persist BEFORE deriving the
     # hot-bucket set so the signature pipeline materializes exactly once
     # — the bucket-size aggregation, and both sides of the candidate
     # self-join, all read the same cached index.
-    banded_idx = _minhash_banded(df, text_col, id_col, num_hashes, bands, shingle_n).persist()
-    banded = banded_idx
+    banded = track(_minhash_banded(df, text_col, id_col, num_hashes, bands, shingle_n))
     report = None
     if max_bucket_size is not None:
-        report = _hot_bucket_report(banded_idx, max_bucket_size)
+        report = _hot_bucket_report(banded, max_bucket_size)
         hot = report.select("band", "band_sig")
         banded = banded.join(broadcast_if_dim(hot, bounded=False, why="hot-set cardinality grows with the corpus; AQE decides"), ["band", "band_sig"], "left_anti")
     left = banded.alias("l")
@@ -366,9 +342,9 @@ def _minhash_core(
         .select(F.col(f"l.{id_col}").alias("id_a"), F.col(f"r.{id_col}").alias("id_b"))
         .distinct()
     )
-    shingle_sets = _spread(df.select(F.col(id_col), F.col(text_col)), id_col).select(
+    shingle_sets = track(_spread(df.select(F.col(id_col), F.col(text_col)), id_col).select(
         F.col(id_col), word_shingles(F.col(text_col), shingle_n).alias("sh")
-    ).persist()
+    ))
     verified = (
         cands.join(shingle_sets.select(F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a")), "id_a")
         .join(shingle_sets.select(F.col(id_col).alias("id_b"), F.col("sh").alias("sh_b")), "id_b")
@@ -380,7 +356,7 @@ def _minhash_core(
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
     )
-    return verified, report, [banded_idx, shingle_sets]
+    return verified, report
 
 
 def minhash_index(
@@ -558,6 +534,10 @@ def minhash_md5_pairs(
     pipeline keeps the full cross-engine value oracle (round-8 VERDICT
     #5: the capped production entry's grade becomes a value proof of the
     cap mechanism itself, not a rows-only count).
+
+    Ids are assumed non-null (the corpus primary key): rows with a null
+    ``id_col`` are filtered out before signing, so they never enter the
+    bucket census, the cap, or the pair output.
     """
     rows_per_band = num_hashes // bands
     # Round-15 (guide §6, duplicate-scan elimination): the candidate
@@ -826,10 +806,9 @@ def simhash_dup_pairs(
                 for b in range(bands)
             ]
         )
-    banded = (
+    banded = track(
         sigs.select(F.col(id_col), F.col("simhash"), F.explode(chunks).alias("c"))
         .select(id_col, "simhash", F.col("c.band").alias("band"), F.col("c.chunk").alias("chunk"))
-        .persist()
     )
     l, r = banded.alias("l"), banded.alias("r")
     cands = (
@@ -877,9 +856,9 @@ def ngram_jaccard_pairs(
     boilerplate (which a near-dup pass should not pair on anyway).
     """
     if max_doc_freq is None:
-        sh = _spread(df.select(F.col(id_col), F.col(text_col)), id_col).select(
+        sh = track(_spread(df.select(F.col(id_col), F.col(text_col)), id_col).select(
             F.col(id_col), F.explode(word_shingles(F.col(text_col), n)).alias("shingle")
-        ).persist()
+        ))
         sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
         l, r = sh.alias("l"), sh.alias("r")
         shared = (
@@ -894,16 +873,16 @@ def ngram_jaccard_pairs(
             .filter(F.col("jaccard") >= threshold)
             .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
         )
-    idx = shingle_index(df, text_col, id_col, n, max_doc_freq).persist()
+    idx = track(shingle_index(df, text_col, id_col, n, max_doc_freq))
     l, r = idx.alias("l"), idx.alias("r")
     cands = (
         l.join(r, (F.col("l.shingle") == F.col("r.shingle")) & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")))
         .select(F.col(f"l.{id_col}").alias("id_a"), F.col(f"r.{id_col}").alias("id_b"))
         .distinct()
     )
-    full = _spread(df.select(F.col(id_col), F.col(text_col)), id_col).select(
+    full = track(_spread(df.select(F.col(id_col), F.col(text_col)), id_col).select(
         F.col(id_col), word_shingles(F.col(text_col), n).alias("sh")
-    ).persist()
+    ))
     return (
         cands.join(full.select(F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a")), "id_a")
         .join(full.select(F.col(id_col).alias("id_b"), F.col("sh").alias("sh_b")), "id_b")
@@ -927,11 +906,8 @@ def embedding_dup_pairs(
     seed: int = 42,
     dim: int | None = None,
     max_bucket_size: int | None = None,
-    eager: bool = False,
 ) -> DataFrame:
     """Embedding cosine near-dup via BANDED random-hyperplane LSH.
-    ``eager=True`` materializes the result and releases the internal
-    banded-index cache (see :func:`embedding_dup_md5_pairs`).
 
     ``num_planes`` sign bits (bit i = sign(v · plane_i)) split into
     ``bands`` band signatures of ``r = num_planes/bands`` bits each; a
@@ -999,10 +975,9 @@ def embedding_dup_pairs(
             for b in range(bands)
         ]
     )
-    banded_idx = with_dots.select(
+    banded = track(with_dots.select(
         F.col(id_col), F.posexplode(band_sigs).alias("band", "band_sig")
-    ).persist()
-    banded = banded_idx
+    ))
     if max_bucket_size is not None:
         # Same whole-bucket drop as embedding_dup_md5_pairs: bounds the
         # per-(band, band_sig) self-join fan-out, which goes quadratic
@@ -1026,7 +1001,7 @@ def embedding_dup_pairs(
         .distinct()
     )
     vecs = df.select(F.col(id_col), F.col(vec_col))
-    verified = (
+    return (
         cands.join(
             vecs.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("_va")), "id_a"
         )
@@ -1040,11 +1015,6 @@ def embedding_dup_pairs(
         )
         .filter(F.col("cosine") >= threshold)
     )
-    if eager:
-        from .caching import materialize_and_release
-
-        return materialize_and_release(verified, [banded_idx])
-    return verified
 
 
 def embedding_dup_md5_pairs(
@@ -1056,7 +1026,6 @@ def embedding_dup_md5_pairs(
     bands: int = 8,
     dim: int = 64,
     max_bucket_size: int | None = None,
-    eager: bool = False,
 ) -> DataFrame:
     """Embedding near-dup via banded SRP-LSH on the ENGINE-PORTABLE md5
     coin — the :func:`minhash_md5_pairs` move applied to the hyperplane
@@ -1088,14 +1057,6 @@ def embedding_dup_md5_pairs(
     census plus both self-join sides — three reads). The left-fold
     summation order is unchanged, so doubles stay bit-identical to the
     DuckDB oracle, which still derives the same coins via md5() in SQL.
-
-    Cache ownership (round-10 ADVICE): the banded-index persist follows
-    the :func:`_minhash_core` contract — ``eager=True`` materializes the
-    result, releases the internal index cache, and returns a persisted
-    caller-OWNED DataFrame (plan layers register it with
-    ``plans.cache_registry.adopt`` so ``release_session_caches()`` frees
-    it between bench runs); ``eager=False`` keeps the build fully lazy
-    for one-shot pipelines that collect exactly once.
     """
     import hashlib
 
@@ -1140,10 +1101,9 @@ def embedding_dup_md5_pairs(
             for b in range(bands)
         ]
     )
-    banded_idx = with_dots.select(
+    banded = track(with_dots.select(
         F.col(id_col), F.posexplode(band_sigs).alias("band", "band_sig")
-    ).persist()
-    banded = banded_idx
+    ))
     if max_bucket_size is not None:
         # Whole-bucket drop, the minhash_md5_pairs cap: r-bit signatures
         # give only 2^r buckets per band, so on UNSTRUCTURED (random)
@@ -1173,7 +1133,7 @@ def embedding_dup_md5_pairs(
     )
     vecs = df.select(F.col(id_col), F.col(vec_col))
     raw_cos = cosine_similarity(F.col("_va"), F.col("_vb"))
-    verified = (
+    return (
         cands.join(
             vecs.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("_va")), "id_a"
         )
@@ -1183,15 +1143,6 @@ def embedding_dup_md5_pairs(
         .filter(raw_cos >= threshold)
         .select("id_a", "id_b", F.round(raw_cos, 6).alias("cosine"))
     )
-    if eager:
-        from .caching import materialize_and_release
-
-        # Release the frame that was PERSISTED (banded_idx), not `banded`:
-        # under max_bucket_size `banded` is rebound to the never-persisted
-        # anti-join frame, so unpersisting it would be a no-op and the LSH
-        # index would stay cached for the session (round-11 ADVICE).
-        return materialize_and_release(verified, [banded_idx])
-    return verified
 
 
 def jaccard_prefix_pairs(
@@ -1239,9 +1190,9 @@ def jaccard_prefix_pairs(
         raise ValueError("threshold must be in (0, 1]")
     from pyspark.sql import Window
 
-    base = _spread(df.select(F.col(id_col), F.col(text_col)), id_col).select(
+    base = track(_spread(df.select(F.col(id_col), F.col(text_col)), id_col).select(
         F.col(id_col), word_shingles(F.col(text_col), n).alias("sh")
-    ).persist()
+    ))
     sh = base.select(F.col(id_col), F.explode("sh").alias("shingle"))
     dfreq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("_df"))
     w = Window.partitionBy(id_col).orderBy("_df", "shingle")
@@ -1896,10 +1847,10 @@ def shingle_containment_pairs(
     boilerplate can be missed — documented cap contract).
     """
     if max_doc_freq is None:
-        sh = _spread(df.select(F.col(id_col), F.col(text_col)), id_col).select(
+        sh = track(_spread(df.select(F.col(id_col), F.col(text_col)), id_col).select(
             F.col(id_col),
             F.explode(word_shingles(F.col(text_col), n)).alias("shingle"),
-        ).persist()
+        ))
         sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
         l, r = sh.alias("l"), sh.alias("r")
         shared = (
@@ -1925,7 +1876,7 @@ def shingle_containment_pairs(
                 "src_id", "dst_id", F.round("containment", 6).alias("containment")
             )
         )
-    idx = shingle_index(df, text_col, id_col, n, max_doc_freq).persist()
+    idx = track(shingle_index(df, text_col, id_col, n, max_doc_freq))
     l, r = idx.alias("l"), idx.alias("r")
     cands = (
         l.join(
@@ -1939,9 +1890,9 @@ def shingle_containment_pairs(
         )
         .distinct()
     )
-    full = _spread(df.select(F.col(id_col), F.col(text_col)), id_col).select(
+    full = track(_spread(df.select(F.col(id_col), F.col(text_col)), id_col).select(
         F.col(id_col), word_shingles(F.col(text_col), n).alias("sh")
-    ).persist()
+    ))
     return (
         cands.join(
             full.select(F.col(id_col).alias("src_id"), F.col("sh").alias("sh_a")),

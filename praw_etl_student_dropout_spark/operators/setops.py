@@ -24,73 +24,46 @@ def dedup_by_key(
     df: DataFrame,
     keys: list[str],
     tiebreak: list[Column | str] | None = None,
-    strategy: str = "min_struct",
 ) -> DataFrame:
     """D2 — exact dedup (seen_ids etl_pipeline.py:41,49-50; INSERT IGNORE
     etl_pipeline.py:122).
 
     With ``tiebreak`` the survivor per key is the row with the smallest
     tiebreak tuple (ascending lexicographic — must be a total order for
-    determinism; SURVEY §7 watch-list). Three physical strategies, all
-    one shuffle:
-
-    - ``"min_struct"`` (default): ``min`` over ONE struct laid out
-      (tiebreak..., payload...) — lexicographic struct-min equals the
-      min_by result whenever the tiebreak is a total order, and when it
-      is not, extends the order over the payload fields (MORE
-      deterministic than min_by's arbitrary pick). Partial/final split
-      holds, so hot keys collapse map-side before the exchange. Local
-      wall-clock matches ``"agg"``, but the agg buffer ships each
-      column ONCE — min_by's buffer carries the ordering struct AND the
-      payload struct, duplicating every plain-column tiebreak's bytes
-      through the shuffle (11 fields vs 6 on the d2 headline query).
-    - ``"agg"``: ``min_by(struct(payload), struct(tiebreak))`` — same
-      shuffle shape; kept for tiebreak expressions whose ordering must
-      NOT extend over payload columns.
-    - ``"window"``: row_number over (keys, tiebreak) — shuffles every
-      duplicate into one reducer per key; a hot key serializes into a
-      single task at scale.
+    determinism; SURVEY §7 watch-list), computed as ``min`` over ONE
+    struct laid out (tiebreak..., payload...) in a single shuffle.
+    Lexicographic struct-min equals the min_by result whenever the
+    tiebreak is a total order, and when it is not, extends the order over
+    the payload fields (MORE deterministic than min_by's arbitrary pick).
+    Partial/final split holds, so hot keys collapse map-side before the
+    exchange, and the agg buffer ships each column ONCE — a
+    ``min_by(struct(payload), struct(tiebreak))`` buffer carries the
+    ordering struct AND the payload struct, duplicating every
+    plain-column tiebreak's bytes through the shuffle (11 fields vs 6 on
+    the d2 headline query). A row_number window instead would shuffle
+    every duplicate into one reducer per key, serializing a hot key into
+    a single task at scale.
 
     Without ``tiebreak``: ``dropDuplicates`` (arbitrary survivor).
     """
     if tiebreak is None:
         return df.dropDuplicates(keys)
-    tb_cols = [F.col(c) if isinstance(c, str) else c for c in tiebreak]
-    if strategy == "window":
-        from pyspark.sql import Window
-
-        w = Window.partitionBy(*keys).orderBy(*tb_cols)
-        return (
-            df.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        )
     rest = [c for c in df.columns if c not in keys]
-    if strategy == "min_struct":
-        # Tiebreak fields first, remaining payload after — struct
-        # ordering compares field-wise left to right (nulls first, same
-        # null placement as min_by's key ordering). Plain-column
-        # tiebreaks keep their own names so each column is shipped ONCE
-        # through the partial-agg buffer and shuffle (min_by duplicates
-        # tiebreak bytes into its key struct); expression tiebreaks get
-        # ``__tb{i}`` aliases and the payload keeps every rest column.
-        plain = [c for c in tiebreak if isinstance(c, str)]
-        fields = [
-            F.col(c).alias(c) if isinstance(c, str) else c.alias(f"__tb{i}")
-            for i, c in enumerate(tiebreak)
-        ]
-        ordered = F.struct(*fields, *[F.col(c) for c in rest if c not in plain])
-        return (
-            df.groupBy(*keys)
-            .agg(F.min(ordered).alias("__row"))
-            .select(*keys, *[F.col("__row")[c].alias(c) for c in rest])
-            .select(*df.columns)
-        )
-    order_key = F.struct(*tb_cols)
-    winner = F.min_by(F.struct(*[F.col(c) for c in rest]), order_key).alias("__row")
+    # Tiebreak fields first, remaining payload after — struct ordering
+    # compares field-wise left to right (nulls first, same null placement
+    # as min_by's key ordering). Plain-column tiebreaks keep their own
+    # names so each column is shipped ONCE through the partial-agg buffer
+    # and shuffle; expression tiebreaks get ``__tb{i}`` aliases and the
+    # payload keeps every rest column.
+    plain = [c for c in tiebreak if isinstance(c, str)]
+    fields = [
+        F.col(c).alias(c) if isinstance(c, str) else c.alias(f"__tb{i}")
+        for i, c in enumerate(tiebreak)
+    ]
+    ordered = F.struct(*fields, *[F.col(c) for c in rest if c not in plain])
     return (
         df.groupBy(*keys)
-        .agg(winner)
+        .agg(F.min(ordered).alias("__row"))
         .select(*keys, *[F.col("__row")[c].alias(c) for c in rest])
         .select(*df.columns)
     )

@@ -12,13 +12,8 @@ def catalog_all():
     prefix of the catalog should land on entries whose results can be
     differentially verified, not on sketch/ANN queries that are rows-only
     by nature (HLL, CMS, LSH recall)."""
-    from . import catalog  # noqa: F401
-
-    import importlib.util
-
-    for mod in ("catalog_text", "catalog_llm", "catalog_streaming"):
-        if importlib.util.find_spec(f"{__name__}.{mod}") is not None:
-            __import__(f"{__name__}.{mod}")
+    # Import order is registration order, which orders the catalog.
+    from . import catalog, catalog_text, catalog_llm, catalog_streaming  # noqa: F401
     from .catalog import REGISTRY
 
     ordered = {k: REGISTRY[k] for k in GRADED_PREFIX if k in REGISTRY}
@@ -35,180 +30,11 @@ def catalog_all():
 #: similarity, multimodal) so BOTH mandates are covered by the hard
 #: differential signal. Every name here is oracle-backed.
 #:
-#: Rotation history (VERDICT mandate: cycle never-graded entries through
-#: the hard signal each round while keeping every §2 operator family
-#: represented):
-#:   r4: slots 41-50 became the ten LLM-pipeline queries.
-#:   r5: swapped out ten long-stable slots (p3_regex_flag,
-#:       f5_year_extract, a1_group_count, a2_group_count_2key,
-#:       a8_distinct, j4_semi_join, d4_intersect, f9_from_json_struct,
-#:       a10_rollup, w2_lag_delta — all stayed green r1-r4 and their
-#:       families remain covered by other graded slots) for ten
-#:       never-driver-graded entries: q9_product_profit,
-#:       q10_returned_revenue, etl_scd2_dim, a16_stats_moments,
-#:       a24_salted_hot_key_agg, a25_incremental_agg, w5_rank_family,
-#:       f15_datetime_family, d3_dup_clusters, t6_gapfill_monthly.
-#:   r6: swapped out the ten slots r5 newly graded (all green on first
-#:       driver contact: q9_product_profit, q10_returned_revenue,
-#:       etl_scd2_dim, a16_stats_moments, a24_salted_hot_key_agg,
-#:       a25_incremental_agg, w5_rank_family, f15_datetime_family,
-#:       d3_dup_clusters, t6_gapfill_monthly) for ten never-driver-graded
-#:       entries pre-verified by the r5 judge's foreign-cwd differential
-#:       run: st3_tumbling_window, st4_session_window (first-ever driver
-#:       grade for the streaming batch-twin family), st6_attribution_batch,
-#:       q2_min_cost_supplier, q13_order_distribution, q22_idle_customers,
-#:       sql_recursive_hierarchy, etl_changelog_compact,
-#:       llm_leakage_safe_split, u11_unigram_logprob.
-#:   r6 continuation: swapped d3_ngram_jaccard (stable green since r4;
-#:       D3 stays covered by d3_exact_dedup + the dedup stages inside
-#:       both funnel entries) for the new end-to-end composition
-#:       llm_corpus_build (funnel → mixture → hash-sample → pack; every
-#:       stage individually driver-graded in past rounds, composition
-#:       verified foreign-cwd value-equal at two SFs before shipping).
-#:   r7: swapped out ten slots (nine of the ten r6 newly graded — all
-#:       green on first driver contact — plus long-stable
-#:       a12_percentiles; st4_session_window STAYS so the streaming
-#:       batch-twin family keeps a graded slot; families remain covered:
-#:       TPC-H by q3/q5/q17/q18 + incoming q21, SQL interface by
-#:       sql_interface_star, ETL by j2/j3, LLM splits/sampling by the
-#:       incoming mixture entry, u11 by the incoming trigram rung) for
-#:       ten never-driver-graded entries pre-verified by the r6 judge's
-#:       foreign-cwd differential run and re-verified this round:
-#:       q21_waiting_supplier (the r6 one-pass rewrite),
-#:       j10_bloom_semi_reduction (each grade = a no-false-negative
-#:       proof of the bloom path), d3_shared_span_pairs,
-#:       d3b_fuzzy_blocked (oracle = brute force ⇒ losslessness proof),
-#:       d3c_entity_resolution, llm_quality_classifier,
-#:       u11_trigram_backoff, a40_kmv_setops, u7_bm25_topk,
-#:       llm_mixture_temperature.
-#:   r8: swapped out the ten slots r7 newly graded (all green on first
-#:       driver contact: q21_waiting_supplier, j10_bloom_semi_reduction,
-#:       d3_shared_span_pairs, d3b_fuzzy_blocked, d3c_entity_resolution,
-#:       llm_quality_classifier, u11_trigram_backoff, a40_kmv_setops,
-#:       u7_bm25_topk, llm_mixture_temperature; families stay covered:
-#:       TPC-H by q3/q5/q17/q18 + incoming q8, joins by j1-j4 + incoming
-#:       j5/j6/j11, D3 near-dup by d3_exact_dedup + incoming
-#:       d3_minhash_md5, LLM surface by llm_curation_funnel /
-#:       llm_corpus_build / u8_decontaminate) for ten never-driver-graded
-#:       entries (VERDICT r7 #1), led by the five r7-new local-only
-#:       greens: j11_salted_skew_join, d3_minhash_md5,
-#:       t8_resample_interp (the O(n^2)-window fix deserves a driver
-#:       grade), w13_rolling_median, w14_rolling_zscore, plus
-#:       j5_asof_join, j6_range_join, a14_event_funnel, q8_market_share,
-#:       u6_gopher_rules. All ten re-verified this round with
-#:       check_oracle at 2 SFs + foreign-cwd harness before shipping.
-#:   r9 (rotation #6): the r8 VERDICT's top item was explicit — "next
-#:       rotation's 50 picked from the never-graded set" (103 of 270
-#:       entries had ever seen a driver grade; 161 oracle-backed entries
-#:       never had). ALL 50 slots therefore turn over this round to
-#:       never-driver-graded entries, still spanning every §2 family:
-#:       TPC-H (7), joins incl. DPP/SCD2/interval/band (4), windows (6),
-#:       aggregates+stats (8), scalar-function families (2), transforms/
-#:       top-k (3), dedup+LLM pipeline (6), ANN/similarity contract
-#:       grades (3), text analysis (3), graph (2), streaming batch-twins
-#:       (2), ETL maintenance (2), sampling + multimodal (2). The 50
-#:       outgoing slots were all green in r8 (most green r1-r8) and every
-#:       outgoing family keeps representatives in the incoming set. All
-#:       50 incoming re-verified this round: check_oracle at sf0.001 +
-#:       sf0.01 and the foreign-cwd driver harness, before shipping.
-#:   r10 (rotation #7): ALL 50 slots turn over again (VERDICT r9 #1),
-#:       led by the ONLY two entries whose last driver grade is a fail
-#:       (a11_approx_distinct / a11b_hll_sketch_union: no_oracle in
-#:       r1/r2, contract-oracle since r8, never re-rotated) and the
-#:       three never-graded streaming batch-twins (VERDICT r9 #5).
-#:       Incoming: the 19 r9-new ops + both r9 oracle conversions
-#:       (d3_minhash_pairs_capped, d3_embedding_dup_lsh), the two r10
-#:       contract conversions (d3_minhash_pairs now driving the
-#:       production minhash_dedup_pairs_with_report path end-to-end,
-#:       d3_simhash_pairs), and 23 from the standing never-graded pool
-#:       spanning TPC-H (4), joins (2), windows (4), aggregates/stats
-#:       (7), scalar functions (3), transforms/setops/ETL (3). The 50
-#:       outgoing r9 slots were all green on first driver contact and
-#:       every outgoing family keeps representatives. All 50 incoming
-#:       verified this round: check_oracle at sf0.001 + sf0.01 and the
-#:       foreign-cwd driver harness, before shipping.
-#:   r11 (rotation #8): ALL 50 slots turn over once more (VERDICT r10
-#:       #1 verbatim): led by the 8 r10-new ops (a64_theil_sen,
-#:       a65_anova_f, a66_cuped, w20_rsi, u6_hapax_ttr, u9_cn_jaccard,
-#:       j17_nearest_event_join, j18_bucketed_colocation), the 9-entry
-#:       never-graded A-family stats block (a45/a48-a51/a53-a55/a57),
-#:       and the r11-new ST2 batch twin st2b_watermark_late_drop
-#:       (VERDICT r10 #5 — a graded late-arrival-drop row). The
-#:       remaining 32 come from the standing never-graded pool spanning
-#:       every family that still HAS never-graded members: aggregates/
-#:       stats+sketches (7), windows (4), scalar functions (3),
-#:       dedup/linkage/setops (5), transforms (1), text (3), similarity
-#:       (2), graph (1), LLM pipeline (3), sampling (1), ETL/profile
-#:       (2). TPC-H and the core join family send NO representatives
-#:       for the first time because every one of their members is
-#:       already hard-graded green (q1-q23, j1-j16 all carry driver
-#:       passes; the join family is still present via j17/j18). The 50
-#:       outgoing r10 slots were all green on first driver contact.
-#:       All 50 incoming verified this round: check_oracle at sf0.001 +
-#:       sf0.01, the TZ=Asia/Tokyo leg, and the foreign-cwd driver
-#:       harness, before shipping.
-#:   r12 (rotation #9 — CLOSE THE POOL, VERDICT r11 #1): all 50 slots
-#:       to never-driver-graded entries, drawn so the never-graded
-#:       remainder shrinks to 5 deliberately-least-risky leftovers
-#:       (a10b_grouping_sets — judge re-verified foreign-cwd in r11 —
-#:       plus the four simplest A-family shapes a19_bitwise_agg,
-#:       a22_listagg, a37_winsorize, a43_grouped_mad) and the 2
-#:       declared-terminal rows-only entries. Led by the 9 r11-new ops
-#:       (u9_label_prop/u9_kcore re-legged this round: bucketed edge
-#:       derivation + bounded-domain rounds), the u6 text-stats block,
-#:       the ANN contract entries (u7_knn_ivf/u7_kmeans_ivf/
-#:       u7_ivf_int8_topk/u7_pq_adc_topk), the llm_* curation set, and
-#:       multimodal_frame_sample (VERDICT r11 #5 — the multimodal
-#:       family's last ungraded member). Slot 1 is the r12-new
-#:       q21_preagg_colocation (VERDICT r11 #2: the mv_preagg rung as a
-#:       graded materialized-view contract). ALL FIVE r12-new widening
-#:       ops (t14_topk_dense_ties, st7_session_gaps,
-#:       sample_reservoir_merge, t15_decile_profile, u9_bfs_levels)
-#:       wait for rotation #10, per the standing verified-on-landing
-#:       pattern. All 50 verified this round at sf0.001 + sf0.01 +
-#:       TZ=Asia/Tokyo + foreign-cwd before shipping.
-#:   r13 (rotation #10 — CLOSE THE HARD-SIGNAL POOL, VERDICT r12 #1):
-#:       slot 1 is the r13-new q21_preagg_refresh (VERDICT r12 #4: the
-#:       incremental-MV maintenance rung). Slots 2-11 are the ten
-#:       never-driver-graded stragglers — the 5 r12-new ops
-#:       (t14_topk_dense_ties, st7_session_gaps, sample_reservoir_merge,
-#:       t15_decile_profile, u9_bfs_levels) and the 5 held-back
-#:       leftovers (a10b_grouping_sets, a19_bitwise_agg, a22_listagg,
-#:       a37_winsorize, a43_grouped_mad) — after which EVERY gradeable
-#:       catalog entry has a hard driver grade. Slots 12-21 are the
-#:       LLM-mandate freshness rows (VERDICT r12 #5: ≥1 per family each
-#:       rotation — dedup, ANN, graph [u9_bfs_levels above], multimodal,
-#:       curation), chosen oldest-latest-grade-first within the
-#:       contract-counted prefixes: d3_dup_clusters, d3_ngram_jaccard
-#:       (r5), llm_leakage_safe_split (r6), u7_bm25_topk,
-#:       d3_shared_span_pairs (r7), u7_knn_bruteforce, u8_decontaminate,
-#:       u10_tfidf_topterms, multimodal_features, u6_gopher_rules (r8).
-#:       The remaining 29 are the globally longest-unrotated greens by
-#:       latest grade round (r3 ×10, r4 ×10, r5 ×9 — the SURVEY §9c
-#:       slate minus the two d3 rows promoted into the freshness block);
-#:       the r6 batch waits for rotation #11. All 50 verified this round
-#:       at sf0.001 + sf0.01 + TZ=Asia/Tokyo + foreign-cwd before
-#:       shipping.
-#:   r14 (rotation #11 — pure freshness, VERDICT r13 #2: the hard-signal
-#:       pool is empty, so slots cycle oldest-latest-grade first):
-#:       slots 1-3 are the r14-new maintenance rungs (etl_snapshot_refresh
-#:       — VERDICT r13 #6, u7_ivf_persisted — #4, q25_association_rules —
-#:       #7; the slot-1 same-round precedent q21_preagg_colocation/
-#:       q21_preagg_refresh set in r12/r13). Slots 4-8: the r13-new five,
-#:       first driver grades (a69_kruskal_wallis, a70_weighted_quantiles,
-#:       a71_psi_drift, q24_itemset_triples, etl_snapshot_asof). Then the
-#:       r6 vintage ×9 and the r7 vintage ×8 complete-batch, and 23 of
-#:       the r8 vintage ×45 (the other 22 wait for rotation #12), chosen
-#:       to re-grade the rows this round's broadcast-hint conversion
-#:       touched (j3_anti_join — also re-pointed at a non-empty result
-#:       per VERDICT r13 #3 — j2, q5, q8) and to keep ≥1 freshness row
-#:       per LLM family (VERDICT r12 #5): dedup d3_exact_dedup +
-#:       d3_minhash_md5, ANN u7_ivf_persisted, graph u9_clustering_coeff
-#:       (r9 — oldest graph grade, also hint-converted), multimodal
-#:       multimodal_meta (r9 — its oldest member), curation
-#:       llm_curation_funnel/llm_corpus_build/llm_quality_classifier.
-#:       All 50 verified this round at sf0.001 + sf0.01 + TZ=Asia/Tokyo
-#:       + foreign-cwd before shipping.
+#: The list rotates: each round cycles never-graded entries through the
+#: hard differential signal while keeping every §2 operator family and
+#: every LLM family represented, and every name is verified at sf0.001 +
+#: sf0.01 + a non-UTC TZ + a foreign cwd before it ships. ``git log -p``
+#: on this file holds the per-round rotation history.
 GRADED_PREFIX = [
     # r14-new maintenance rungs (VERDICT r13 #6 / #4 / #7)
     "etl_snapshot_refresh",

@@ -17,9 +17,9 @@ same builder WOULD silently reuse it, skewing any comparison against an
 engine that re-executes in full). Long-lived sessions (notebooks,
 multi-tenant drivers) call it at their own task boundaries.
 
-Operators with the same shape (MinHash's banded LSH index) expose an
-``eager=True`` mode instead (``operators/caching.py``): materialize the
-result, release the intermediates, hand the caller one owned cache.
+Operators with the same shape (MinHash's banded LSH index, shingle
+inverted indexes) persist their intermediates through :func:`track` too,
+so every lazily returned plan has this one owner.
 """
 
 from __future__ import annotations
@@ -33,14 +33,6 @@ def track(df: DataFrame) -> DataFrame:
     """Persist ``df`` (MEMORY_AND_DISK) and register it for release.
     Returns the persisted DataFrame."""
     df = df.persist()
-    _CACHES.append(df)
-    return df
-
-
-def adopt(df: DataFrame) -> DataFrame:
-    """Register an ALREADY-persisted DataFrame (e.g. the caller-owned
-    result of an operator's ``eager=True`` mode) for release, without
-    re-persisting it. Returns the same DataFrame."""
     _CACHES.append(df)
     return df
 

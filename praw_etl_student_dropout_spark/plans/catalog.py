@@ -922,7 +922,7 @@ def d2_dedup_by_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     # partkey, suppkey) stay long — narrowing them is not provably safe.
     # Interleaved min-of-5 ×3 rounds: 0.84-0.97 -> 0.77-0.84 s at
     # sf0.1-local[32]; shuffle 30.6 B/record before (4.5 MB total,
-    # tools/r15_shuffle_bytes probe), values identical.
+    # `git show 443f299:tools/r15_shuffle_bytes.py`), values identical.
     needed = li.select(
         "l_orderkey",
         F.col("l_linenumber").cast("int").alias("l_linenumber"),
@@ -3039,11 +3039,12 @@ def q16_supplier_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q21_plan(li: DataFrame, ord_f: DataFrame, nation_sup: DataFrame) -> DataFrame:
     """The q21 one-pass plan over prepared frames, shared by the fixture
-    catalog entry and the bucketed-layout variant (tools/
-    q21_bucketed_probe.py): when ``li``/``ord_f`` scan tables bucketed
-    by orderkey, the SAME plan runs with ZERO data-proportional
-    exchanges — the orders join, the (order,supplier) collapse, and the
-    per-order windows all reuse the bucket distribution.
+    catalog entry and the bucketed-layout variant (`git show
+    443f299:tools/q21_bucketed_probe.py`): when ``li``/``ord_f`` scan
+    tables bucketed by orderkey, the SAME plan runs with ZERO
+    data-proportional exchanges — the orders join, the (order,supplier)
+    collapse, and the per-order windows all reuse the bucket
+    distribution.
 
     Round-11 lean rewrite (VERDICT #3): supplier NAMES never enter the
     fact pipeline. The old shape left-broadcast nation_sup onto every
@@ -4516,8 +4517,8 @@ def a24_salted_hot_key_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     "a semantics change (the salt column never escapes), so every driver "
     "grade proves result-equality of the salted plan. Broadcast is "
     "disabled via hint-free sizing at real scale; the paired skew probe "
-    "(tools/skew_probe.py, BASELINE §round-7-skew) measures the salted "
-    "vs unsalted wall-clock on a 32x hot-key replica.",
+    "(`git show 443f299:tools/skew_probe.py`, BASELINE §round-7-skew) "
+    "measures the salted vs unsalted wall-clock on a 32x hot-key replica.",
 )
 def j11_salted_skew_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.joins import salted_join

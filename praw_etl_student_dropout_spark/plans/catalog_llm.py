@@ -354,19 +354,16 @@ def u8_decontaminate_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def d3_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import minhash_dedup_pairs_with_report
-    from .cache_registry import adopt, track
+    from .cache_registry import track
 
     docs = _t(spark, sf_dir, "documents")["documents"]
-    # eager=True (round-10 ADVICE): _minhash_core's internal persists
-    # (banded index, shingle sets) are materialized and RELEASED inside
-    # the operator; the returned pairs/report come back persisted and
-    # caller-owned — adopt() registers them so release_session_caches()
-    # frees them deterministically between bench runs.
+    # The operator tracks its own index persists; the pair set is tracked
+    # here because two contract checks below read it.
     pairs, report = minhash_dedup_pairs_with_report(
         docs, "text", "doc_id", max_bucket_size=200, threshold=0.2,
-        num_hashes=32, bands=16, eager=True,
+        num_hashes=32, bands=16,
     )
-    pairs, report = adopt(pairs), adopt(report)
+    pairs = track(pairs)
     exact = track(
         ngram_jaccard_pairs(docs, "text", "doc_id", n=3, threshold=0.2)
     )
@@ -631,19 +628,11 @@ def _srp_md5_sql(
 )
 def d3_embedding_dup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import embedding_dup_md5_pairs
-    from .cache_registry import adopt
 
     e = _t(spark, sf_dir, "embeddings")["embeddings"]
-    # eager=True: the operator materializes the pair set and releases its
-    # internal banded-index persist; adopt() hands the one remaining
-    # (caller-owned) cache to the registry so release_session_caches()
-    # frees it between bench runs — no unowned session-lifetime cache,
-    # and no timed run serving the warm-up's LSH index (round-10 ADVICE).
-    return adopt(
-        embedding_dup_md5_pairs(
-            e, "embedding", "vec_id", threshold=0.35, num_planes=16, bands=8,
-            dim=64, max_bucket_size=600, eager=True,
-        )
+    return embedding_dup_md5_pairs(
+        e, "embedding", "vec_id", threshold=0.35, num_planes=16, bands=8,
+        dim=64, max_bucket_size=600,
     )
 
 
@@ -1553,7 +1542,7 @@ def llm_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     # when scan parallelism is deficient (no-op on a real multi-split
     # corpus); the contamination branch already spreads inside
     # shingle_index. 1.506 -> 1.112 s at sf0.1-local[32], values
-    # identical (tools/r14_spread_probe.py).
+    # identical (`git show 443f299:tools/r14_spread_probe.py`).
     # Round-15 (guide §2.3, shuffle fewer bytes): the fingerprint only
     # exists to PARTITION the survivor window — it never reaches the
     # output — so it rides the exchange as the raw 16-byte md5 digest
@@ -1561,7 +1550,7 @@ def llm_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     # md5 output, so the window groups are identical; measured 16 B/doc
     # off the survivor exchange (2 055 353 -> 1 979 342 total funnel
     # shuffle bytes at sf0.1), stage counts byte-identical, time flat at
-    # the fixture floor (tools/r15_fp_binary.py probe).
+    # the fixture floor (`git show 443f299:tools/r15_fp_binary.py`).
     flags = _spread(docs.select("doc_id", "text"), "doc_id").select(
         "doc_id",
         (lang_id(F.col("text")) == "en").alias("is_en"),

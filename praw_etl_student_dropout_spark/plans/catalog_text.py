@@ -646,7 +646,8 @@ def u10_tfidf_topterms(spark: SparkSession, sf_dir: str) -> DataFrame:
     # real multi-split corpus), and because tf/df/n hang off the SAME
     # spread subtree, ReuseExchange materializes the scan+shuffle once —
     # the former duplicate parquet scan is gone. 0.975 -> 0.682 s at
-    # sf0.1-local[32], values identical (tools/r14_spread_probe.py).
+    # sf0.1-local[32], values identical
+    # (`git show 443f299:tools/r14_spread_probe.py`).
     docs = _spread(
         _t(spark, sf_dir, "documents")["documents"].select("doc_id", "text"),
         "doc_id",

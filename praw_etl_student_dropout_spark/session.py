@@ -60,13 +60,10 @@ ENGINE_CONF: dict[str, str] = {
     #  - sf0.1 fixture (floor-dominated, tiny blocks): zstd 5.08/5.20 s
     #    vs lz4 4.55/4.90 s (+6-11%) -> zstd's CPU costs with no byte
     #    payoff at this scale.
-    # Default therefore stays lz4 so the driver's fixture bench remains
-    # comparable across rounds; production deployments with real shuffle
-    # volumes should set SPARK_GRAFT_IO_CODEC=zstd (less CPU-bound disk
-    # and network per shuffled byte, §2.3). Resolved in get_spark() — not
-    # here — so the env knob is read at session-build time like
-    # SPARK_GRAFT_CPUS / SPARK_GRAFT_DRIVER_MEM (ADVICE r14: a
-    # module-import-time read silently ignores env set after import).
+    # Default therefore stays lz4 so the fixture bench remains comparable
+    # across rounds; deployments with real shuffle volumes override it
+    # with get_spark(extra_conf={"spark.io.compression.codec": "zstd"})
+    # (less CPU-bound disk and network per shuffled byte, §2.3).
     "spark.io.compression.codec": "lz4",
     "spark.ui.enabled": "false",
     # Console progress bars write \r-padded stage lines to stderr; under a
@@ -75,15 +72,6 @@ ENGINE_CONF: dict[str, str] = {
     # plans are unaffected.
     "spark.ui.showConsoleProgress": "false",
 }
-
-
-def _env_conf() -> dict[str, str]:
-    """Conf entries resolved from the environment at SESSION-BUILD time
-    (not module import), so setting them programmatically between import
-    and get_spark() behaves like SPARK_GRAFT_CPUS / _DRIVER_MEM."""
-    return {
-        "spark.io.compression.codec": os.environ.get("SPARK_GRAFT_IO_CODEC", "lz4")
-    }
 
 
 def get_spark(
@@ -115,7 +103,6 @@ def get_spark(
         master = f"local[{cpus}]"
     builder = builder.master(master)
     conf = dict(ENGINE_CONF)
-    conf.update(_env_conf())
     conf["spark.sql.shuffle.partitions"] = str(
         shuffle_partitions if shuffle_partitions is not None else int(cpus)
     )

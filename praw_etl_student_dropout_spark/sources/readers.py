@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..plans.cache_registry import track
 from ..schemas import FIXTURE_TABLES
 
 
@@ -300,13 +301,13 @@ def read_json_with_quarantine(
     full_schema = T.StructType(
         list(schema.fields) + [T.StructField(corrupt_col, T.StringType(), True)]
     )
-    raw = (
+    # One tracked parse feeds both splits (Spark requires caching for
+    # corrupt-record filters: SPARK-21610's referencing rule).
+    raw = track(
         spark.read.schema(full_schema)
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", corrupt_col)
         .json(path)
-        .cache()  # one parse feeds both splits (Spark requires it for
-        # corrupt-record filters: SPARK-21610's referencing rule)
     )
     clean = raw.filter(F.col(corrupt_col).isNull()).drop(corrupt_col)
     quarantine = raw.filter(F.col(corrupt_col).isNotNull()).select(

@@ -3,17 +3,27 @@ containment, determinism."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from praw_etl_student_dropout_spark.operators.dedup import (
+    embedding_dup_md5_pairs,
     embedding_dup_pairs,
     exact_dedup,
+    jaccard_prefix_pairs,
     minhash_dedup_pairs,
+    minhash_dedup_pairs_with_report,
     ngram_jaccard_pairs,
+    shingle_containment_pairs,
     simhash_dup_pairs,
     word_shingles,
 )
-from praw_etl_student_dropout_spark.sources.readers import load_tables
+from praw_etl_student_dropout_spark.plans.cache_registry import release_session_caches
+from praw_etl_student_dropout_spark.sources.readers import (
+    load_tables,
+    read_json_with_quarantine,
+)
 
 
 def docs(spark, sf_dir):
@@ -373,8 +383,7 @@ def test_minhash_with_report_shares_parameterization(spark, sf_dir):
     the report describes exactly the buckets the join skipped even under
     NON-default banding (the failure mode: calling minhash_hot_buckets
     separately with different num_hashes/bands silently reports
-    different buckets). Also: eager=True must leave no unowned cached
-    intermediates behind — only the caller-owned results."""
+    different buckets)."""
     from praw_etl_student_dropout_spark.operators.dedup import (
         minhash_dedup_pairs_with_report,
         minhash_hot_buckets,
@@ -406,22 +415,6 @@ def test_minhash_with_report_shares_parameterization(spark, sf_dir):
     # which is exactly why the report must be derived from the join's index
     other = minhash_hot_buckets(degenerate, "text", "doc_id", 50).collect()
     assert sorted(map(tuple, other)) != sorted(map(tuple, got_report))
-
-    # eager mode: intermediates released, results caller-owned
-    before = {
-        rid for rid, _ in spark.sparkContext._jsc.getPersistentRDDs().items()
-    }
-    pairs2, report2 = minhash_dedup_pairs_with_report(
-        degenerate, "text", "doc_id", max_bucket_size=50,
-        threshold=0.9, num_hashes=16, bands=4, eager=True,
-    )
-    assert sorted(map(tuple, report2.collect())) == sorted(map(tuple, got_report))
-    pairs2.unpersist()
-    report2.unpersist()
-    after = {
-        rid for rid, _ in spark.sparkContext._jsc.getPersistentRDDs().items()
-    }
-    assert after <= before, "eager run leaked a cached intermediate"
 
 
 def test_minhash_cap_preserves_normal_pairs(spark, sf_dir):
@@ -642,32 +635,62 @@ def test_passjoin_equals_brute_force_and_handles_ties(spark, sf_dir):
         assert got == brute(k), f"k={k}"
 
 
-def test_embedding_md5_eager_capped_releases_index(spark, sf_dir):
-    """Round-11 ADVICE regression: embedding_dup_md5_pairs(eager=True,
-    max_bucket_size=...) must unpersist the frame it actually PERSISTED
-    (banded_idx), not the anti-join rebinding — exactly how the graded
-    d3_embedding_dup_lsh entry calls it. A leak here lets later timed
-    bench runs serve the warm-up's LSH index from cache."""
-    from praw_etl_student_dropout_spark.operators.dedup import (
-        embedding_dup_md5_pairs,
-    )
+QUARANTINE_SCHEMA = T.StructType([T.StructField("id", T.LongType(), True)])
 
-    e = load_tables(spark, sf_dir, ["embeddings"])["embeddings"]
-    before = {
-        rid for rid, _ in spark.sparkContext._jsc.getPersistentRDDs().items()
-    }
-    pairs = embedding_dup_md5_pairs(
-        e, "embedding", "vec_id", threshold=0.35, num_planes=16, bands=8,
-        dim=64, max_bucket_size=600, eager=True,
-    )
-    assert pairs.count() >= 0
-    pairs.unpersist()
-    after = {
-        rid for rid, _ in spark.sparkContext._jsc.getPersistentRDDs().items()
-    }
-    assert after <= before, (
-        "eager capped run leaked a cached intermediate (banded_idx)"
-    )
+# Every operator that persists an intermediate inside a lazily returned
+# plan; each entry maps (documents, embeddings, json path) to its outputs.
+LAZY_CACHING_OPS = {
+    "ngram_jaccard": lambda d, e, p: [ngram_jaccard_pairs(d, "text", "doc_id")],
+    "ngram_jaccard_capped": lambda d, e, p: [
+        ngram_jaccard_pairs(d, "text", "doc_id", max_doc_freq=5)
+    ],
+    "simhash": lambda d, e, p: [simhash_dup_pairs(d, "text", "doc_id")],
+    "containment": lambda d, e, p: [shingle_containment_pairs(d, "text", "doc_id")],
+    "containment_capped": lambda d, e, p: [
+        shingle_containment_pairs(d, "text", "doc_id", max_doc_freq=5)
+    ],
+    "jaccard_prefix": lambda d, e, p: [jaccard_prefix_pairs(d, "text", "doc_id")],
+    "minhash": lambda d, e, p: [minhash_dedup_pairs(d, "text", "doc_id")],
+    "minhash_capped": lambda d, e, p: [
+        minhash_dedup_pairs(d, "text", "doc_id", max_bucket_size=50)
+    ],
+    "minhash_with_report": lambda d, e, p: list(
+        minhash_dedup_pairs_with_report(d, "text", "doc_id", max_bucket_size=50)
+    ),
+    "embedding_capped": lambda d, e, p: [
+        embedding_dup_pairs(e, "embedding", "vec_id", dim=64, max_bucket_size=600)
+    ],
+    "embedding_md5_capped": lambda d, e, p: [
+        embedding_dup_md5_pairs(e, "embedding", "vec_id", max_bucket_size=600)
+    ],
+    "json_quarantine": lambda d, e, p: list(
+        read_json_with_quarantine(d.sparkSession, p, QUARANTINE_SCHEMA)
+    ),
+}
+
+
+@pytest.mark.parametrize("op", list(LAZY_CACHING_OPS))
+def test_lazy_operator_caches_are_released(spark, sf_dir, tmp_path, op):
+    """Every intermediate a lazily returned operator persists is owned by
+    the session cache registry: after the caller's action,
+    release_session_caches() leaves no cached RDD that was not there
+    before the call (a leaked index would let a later run serve it from
+    cache)."""
+    tables = load_tables(spark, sf_dir, ["documents", "embeddings"])
+    path = tmp_path / "in.jsonl"
+    path.write_text('{"id": 1}\nnot json\n')
+
+    def cached():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    # Start from an empty cache: Spark's CacheManager skips persisting a
+    # plan an earlier call left cached, which would hide a leak here.
+    spark.catalog.clearCache()
+    before = cached()
+    for df in LAZY_CACHING_OPS[op](tables["documents"], tables["embeddings"], str(path)):
+        df.count()
+    release_session_caches()
+    assert cached() <= before
 
 
 def test_minhash_md5_capped_single_corpus_scan(spark, sf_dir, tmp_path):

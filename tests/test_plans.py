@@ -88,7 +88,7 @@ def test_dedup_agg_strategy_is_single_shuffle(spark, sf_dir):
     from praw_etl_student_dropout_spark.operators.setops import dedup_by_key
 
     li = load_tables(spark, sf_dir, ["lineitem"])["lineitem"]
-    # default (min_struct): one shuffle, partial min below the exchange —
+    # one shuffle, partial min below the exchange —
     # the map-side combine that makes hot keys harmless
     deduped = dedup_by_key(
         li, ["l_orderkey"], tiebreak=["l_linenumber", "l_partkey"]
@@ -98,15 +98,6 @@ def test_dedup_agg_strategy_is_single_shuffle(spark, sf_dir):
     assert "partial_min" in plan
     exchange_at = plan.index("Exchange")
     assert "partial_min" in plan[exchange_at:], "partial agg must be below the shuffle"
-    # "agg" strategy: same shape via min_by (struct buffer forces
-    # SortAggregate, but the partial/final split is what matters)
-    plan_agg = plan_of(
-        dedup_by_key(
-            li, ["l_orderkey"], tiebreak=["l_linenumber", "l_partkey"], strategy="agg"
-        )
-    )
-    assert plan_agg.count("Exchange") == 1
-    assert "partial_min_by" in plan_agg
 
 
 def test_semi_join_stays_semi(spark, sf_dir, registry):
