@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from ..functions.text import clean_text, dropout_mentioned, sentiment_label, sentiment_score
 from ..operators.aggregations import insight_summary, mode_of, pivot_count
 from ..operators.etl import build_dim, build_fact
+from ..sources.readers import read_parquet_if_exists
 from ..sources.writers import csv_snapshot, idempotent_append
 
 
@@ -93,14 +94,20 @@ def load_star(spark: SparkSession, enriched: DataFrame, warehouse_dir: str) -> i
     dim_sub.write.mode("overwrite").parquet(f"{warehouse_dir}/dim_subreddit")
     dim_time.write.mode("overwrite").parquet(f"{warehouse_dir}/dim_time")
     fact_path = f"{warehouse_dir}/fact_post"
-    try:
-        existing = spark.read.parquet(fact_path)
-    except Exception:
+    existing = read_parquet_if_exists(spark, fact_path)
+    if existing is None:
         existing = fact.filter(F.lit(False))
-    appended = idempotent_append(
-        fact, existing, ["id"], lambda df: df.write.mode("append").parquet(fact_path)
-    )
-    return appended.count()
+    appended: list[int] = []
+
+    def append(delta: DataFrame) -> None:
+        # count the pinned delta before the write: appending to the path
+        # `existing` scans makes Spark re-cache the delta against the
+        # grown table, after which it reads empty
+        appended.append(delta.count())
+        delta.write.mode("append").parquet(fact_path)
+
+    idempotent_append(fact, existing, ["id"], append).unpersist()
+    return appended[0]
 
 
 def query_star(spark: SparkSession, warehouse_dir: str) -> DataFrame:

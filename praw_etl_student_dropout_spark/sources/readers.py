@@ -10,6 +10,7 @@ from __future__ import annotations
 from collections.abc import Iterable
 from pathlib import Path
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -24,6 +25,18 @@ def read_parquet(spark: SparkSession, path: str, schema: T.StructType | None = N
     if schema is not None:
         reader = reader.schema(schema)
     return reader.parquet(path)
+
+
+def read_parquet_if_exists(spark: SparkSession, path: str) -> DataFrame | None:
+    """Parquet scan of ``path``, or None when nothing has been written
+    there yet (an append target before its first batch). Only a missing
+    path is absorbed; any other analysis error is raised."""
+    try:
+        return spark.read.parquet(path)
+    except AnalysisException as e:
+        if e.getCondition() == "PATH_NOT_FOUND":
+            return None
+        raise
 
 
 # Parquet footer schemas by absolute path, process-wide. A bare

@@ -3,8 +3,8 @@
 The reference's sinks are a timestamped CSV backup (etl_pipeline.py:67-70)
 and an ``INSERT IGNORE`` MySQL batch append (etl_pipeline.py:121-127).
 Both generalize here: snapshot = partitioned file write; INSERT IGNORE =
-anti-join-then-append (the only idempotent-append JDBC supports without a
-server-side MERGE).
+semi-reduce, anti-join, then append (the only idempotent-append JDBC
+supports without a server-side MERGE).
 """
 
 from __future__ import annotations
@@ -13,8 +13,6 @@ from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from ..operators.joins import anti_join_new_keys
 
 
 def csv_snapshot(df: DataFrame, base_dir: str, prefix: str = "backup", ts: datetime | None = None) -> str | None:
@@ -55,23 +53,39 @@ def idempotent_append(
 ) -> DataFrame:
     """S4/J3 — INSERT IGNORE semantics (etl_pipeline.py:97,106,122).
 
-    Anti-join ``new_rows`` against ``existing`` on ``keys`` so only
-    unseen keys reach the sink, then invoke ``sink(df)`` (a write
-    callback: jdbc append, parquet append, ...). Returns the appended
-    subset. Within-batch duplicates are also collapsed (first by key),
-    matching INSERT IGNORE's first-wins behavior.
+    Only keys unseen in ``existing`` reach ``sink(df)`` (a write
+    callback: jdbc append, parquet append, ...); the appended subset is
+    returned. Within-batch duplicates collapse (first by key), matching
+    INSERT IGNORE's first-wins behavior; a null key never counts as
+    present, as under a unique index.
 
-    The delta is PINNED (persist + materialize) before the sink runs:
-    when ``existing`` lazily re-reads the same table the sink appends to
-    (JDBC, parquet re-read), an unpinned anti-join would re-evaluate
-    AFTER the write and return the empty post-append delta — or worse,
-    double-append under retries. The pin is one pass over the delta,
-    which the sink was about to pay anyway. The returned DataFrame is
-    the persisted delta and is OWNED BY THE CALLER (unpersist when
-    done — SCALING.md cache contract).
+    Three steps, none of which ships the table through the driver:
+
+    1. Semi-reduce (Bernstein & Chiu, JACM 1981): ``existing``'s key
+       columns, semi-joined to the batch's keys, give the batch keys the
+       table already holds. The table side is streamed once, key
+       columns only, and never broadcast; only the batch's keys are
+       (a batch over the broadcast threshold makes this a shuffle join).
+    2. Anti-join the deduplicated batch against those hits, by shuffle
+       hash: the hits are at most the batch's key count, and the batch
+       is already hash-partitioned on the keys by its dedup, so no
+       broadcast carries anything read from the table.
+    3. Pin the delta (persist + materialize) before the sink runs, so
+       the sink writes exactly the delta even when ``existing`` lazily
+       re-reads the table the sink appends to (JDBC, parquet re-read)
+       and a retried write cannot double-append. The pin is one pass
+       over the delta, which the sink was about to pay anyway. It does
+       not outlive a file sink that appends to a path ``existing``
+       scans: Spark then re-caches the delta against the grown table
+       and the returned frame reads empty, so read the delta inside
+       the sink.
+
+    The returned DataFrame is the persisted delta and is OWNED BY THE
+    CALLER (unpersist when done — SCALING.md cache contract).
     """
+    hit = existing.select(*keys).join(new_rows.select(*keys), on=keys, how="left_semi")
     deduped = new_rows.dropDuplicates(keys)
-    fresh = anti_join_new_keys(deduped, existing, keys).persist()
+    fresh = deduped.join(hit.hint("shuffle_hash"), on=keys, how="left_anti").persist()
     fresh.count()  # materialize BEFORE the sink mutates `existing`
     sink(fresh)
     return fresh

@@ -22,6 +22,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..schemas import EVENTS
+from ..sources.readers import read_parquet_if_exists
+from ..sources.writers import idempotent_append
 
 
 def _state_version_below(path: str, batch_id: int) -> int | None:
@@ -123,19 +125,20 @@ def run_available_now(
 def foreach_batch_idempotent_append(
     stream_df: DataFrame, keys: list[str], target_path: str, checkpoint_dir: str
 ) -> None:
-    """ST1+J3 — micro-batch idempotent load: each batch anti-joins the
-    sink's current keys before appending (exactly the reference's INSERT
-    IGNORE cadence, etl_pipeline.py:121-127, without the server)."""
+    """ST1+J3 — micro-batch idempotent load: each batch goes through
+    ``idempotent_append`` against the sink's current contents (exactly
+    the reference's INSERT IGNORE cadence, etl_pipeline.py:121-127,
+    without the server). The first batch finds no sink and appends its
+    deduplicated rows."""
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        fresh = batch_df.dropDuplicates(keys)
-        try:
-            existing = spark.read.parquet(target_path).select(*keys)
-            fresh = fresh.join(existing, on=keys, how="left_anti")
-        except Exception:
-            pass  # first batch: sink doesn't exist yet
-        fresh.write.mode("append").parquet(target_path)
+        existing = read_parquet_if_exists(batch_df.sparkSession, target_path)
+        if existing is None:
+            existing = batch_df.filter(F.lit(False))
+        fresh = idempotent_append(
+            batch_df, existing, keys, lambda df: df.write.mode("append").parquet(target_path)
+        )
+        fresh.unpersist()
 
     q = (
         stream_df.writeStream.foreachBatch(write_batch)

@@ -70,18 +70,39 @@ def test_pivot_count_equals_spark_pivot(spark, data):
     assert mine == ref
 
 
-@given(data=rows)
-@SET
-def test_idempotent_append_converges(spark, data, tmp_path_factory):
-    from praw_etl_student_dropout_spark.operators.joins import anti_join_new_keys
+nullable_keys = st.none() | keys
 
-    df = spark.createDataFrame(data, "k int, v long") if data else spark.createDataFrame([], "k int, v long")
-    first = df.dropDuplicates(["k"])
-    # appending the same batch against itself yields nothing new
-    fresh = anti_join_new_keys(first, first, ["k"])
-    assert fresh.count() == 0
-    distinct_keys = {k for k, _ in data}
-    assert first.count() == len(distinct_keys)
+
+@given(
+    batch=st.lists(st.tuples(nullable_keys, vals), max_size=40),
+    table=st.lists(nullable_keys, max_size=10),
+)
+@SET
+def test_idempotent_append_converges(spark, batch, table):
+    """INSERT IGNORE model: the appended keys are the batch's distinct
+    keys minus the table's non-null keys (a null key is never present,
+    as under a unique index), and replaying the batch against the grown
+    table appends nothing but its null key again."""
+    from praw_etl_student_dropout_spark.sources.writers import idempotent_append
+
+    new_rows = spark.createDataFrame(batch, "k int, v long")
+    existing = spark.createDataFrame([(k, 0) for k in table], "k int, v long")
+    sunk: list = []
+
+    def append(df):
+        sunk.extend(df.collect())
+
+    idempotent_append(new_rows, existing, ["k"], append).unpersist()
+    batch_keys = [k for k, _ in batch]
+    appended = [r.k for r in sunk]
+    assert sorted(appended, key=str) == sorted(set(batch_keys) - {k for k in table if k is not None}, key=str)
+    # every appended row is one of the batch's rows for its key
+    assert {(r.k, r.v) for r in sunk} <= set(batch)
+
+    grown = existing.unionByName(spark.createDataFrame(sunk, "k int, v long"))
+    sunk.clear()
+    idempotent_append(new_rows, grown, ["k"], append).unpersist()
+    assert [r.k for r in sunk] == ([None] if None in batch_keys else [])
 
 
 def test_sampling_reproducible_and_in_bounds(spark, sf_dir):

@@ -49,6 +49,20 @@ def test_full_pipeline_rerun_is_incremental(spark, tmp_path):
     assert {tuple(r) for r in second.heatmap.collect()} == first_heat
 
 
+
+def test_rerun_with_new_posts_counts_them_and_releases_the_delta(spark, tmp_path):
+    """A re-run that brings new posts reports exactly the rows it
+    appended, although its sink grows the table the delta was computed
+    from, and leaves no cached delta behind."""
+    wh = str(tmp_path / "wh")
+    first = run_pipeline(spark, KEYS[:1], TERMS, wh)
+    spark.catalog.clearCache()
+    before = set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+    second = run_pipeline(spark, KEYS, TERMS, wh)
+    grown = spark.read.parquet(f"{wh}/fact_post").count()
+    assert 0 < second.fact_appended == grown - first.raw_count
+    assert set(spark.sparkContext._jsc.getPersistentRDDs().keys()) <= before
+
 def test_pipeline_fact_has_no_orphan_keys(spark, tmp_path):
     wh = str(tmp_path / "wh")
     run_pipeline(spark, KEYS, TERMS, wh)

@@ -14,6 +14,7 @@ from praw_etl_student_dropout_spark.sources.writers import (
     idempotent_append,
     write_parquet,
 )
+from tests.conftest import SF_DIR_ORACLE
 
 
 def test_csv_snapshot_round_trip(spark, sf_dir, tmp_path):
@@ -62,6 +63,67 @@ def test_idempotent_append_no_growth(spark, sf_dir, tmp_path):
     second = idempotent_append(nation, existing, ["n_nationkey"], sink)
     assert second.count() == 0
     assert spark.read.parquet(target).count() == nation.count()
+
+
+
+def _plan_nodes(node, path=()):
+    """Yield ``(node, path)`` over a physical plan, where ``path`` lists
+    ``(ancestor, child_index)`` from the root. AQE wrappers are looked
+    through: an adaptive plan by its current plan, a query stage by the
+    exchange it ran, a reused exchange by the exchange it reuses."""
+    name = node.getClass().getSimpleName()
+    if name == "AdaptiveSparkPlanExec":
+        yield from _plan_nodes(node.executedPlan(), path)
+        return
+    if name.endswith("QueryStageExec"):
+        yield from _plan_nodes(node.plan(), path)
+        return
+    if name == "ReusedExchangeExec":
+        yield from _plan_nodes(node.child(), path)
+        return
+    yield node, path
+    children = node.children()
+    for i in range(children.size()):
+        yield from _plan_nodes(children.apply(i), path + ((node, i),))
+
+
+def test_idempotent_append_streams_table_never_broadcasts(spark, tmp_path):
+    """INSERT IGNORE must not ship the table through the driver: in the
+    delta's executed plan, the table's scan sits only on the streamed
+    side of the LeftSemi join that reduces it to the batch's keys, and no
+    broadcast exchange carries anything read from it. At sf0.01 a plain
+    anti-join against the table broadcasts the table's keys instead."""
+    keys = ["l_orderkey", "l_linenumber"]
+    lineitem = load_tables(spark, SF_DIR_ORACLE, ["lineitem"])["lineitem"]
+    table, batch = str(tmp_path / "table"), str(tmp_path / "batch")
+    lineitem.write.parquet(table)
+    # resent rows plus brand-new keys, in a file of their own so no
+    # filter on the batch can be inferred onto the table's scan
+    resent = lineitem.filter(F.col("l_orderkey") % 50 == 0)
+    new = resent.withColumn("l_orderkey", -F.col("l_orderkey") - 1)
+    resent.unionByName(new).write.parquet(batch)
+
+    fresh = idempotent_append(
+        spark.read.parquet(batch), spark.read.parquet(table), keys, lambda df: None
+    )
+    try:
+        assert fresh.count() == new.select(*keys).distinct().count()
+        cached = fresh._jdf.queryExecution().optimizedPlan().cacheBuilder().cachedPlan()
+        table_scans = [
+            (node, path)
+            for node, path in _plan_nodes(cached)
+            if node.getClass().getSimpleName() == "FileSourceScanExec"
+            and node.relation().location().rootPaths().head().toString().endswith("/table")
+        ]
+        assert table_scans
+        for _, path in table_scans:
+            ancestors = [a.getClass().getSimpleName() for a, _ in path]
+            assert "BroadcastExchangeExec" not in ancestors, ancestors
+            join, side = next((a, i) for a, i in reversed(path) if "Join" in a.getClass().getSimpleName())
+            assert join.joinType().toString() == "LeftSemi", ancestors
+            assert join.buildSide().toString() == "BuildRight" and side == 0, ancestors
+    finally:
+        fresh.unpersist()
 
 
 def test_upsert_dim_key_stability(spark):
