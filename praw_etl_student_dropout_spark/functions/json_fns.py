@@ -10,16 +10,9 @@ from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 
 def json_get(col: Column, path: str) -> Column:
     """Extract a JSON path as string (cast at call site)."""
     return F.get_json_object(col, path)
 
-
-def parse_props(col: Column, schema: T.StructType | None = None) -> Column:
-    """Parse the JSON string into a typed struct (preferred at scale —
-    one parse, then struct field pruning instead of repeated path scans)."""
-    schema = schema or T.StructType([T.StructField("k", T.LongType())])
-    return F.from_json(col, schema)

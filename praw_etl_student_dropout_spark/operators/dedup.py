@@ -13,13 +13,23 @@ groupBy, all codegen'd):
 - ``embedding_dup_pairs`` cosine near-dup over embeddings via
                           random-hyperplane LSH buckets
 
+Each LSH family has ONE pipeline parameterized by its coin: the md5
+MinHash twin (``minhash_md5_pairs``) runs ``_minhash_core`` with the md5
+signature fold and decimal band keys, and both SRP-embedding functions
+(Gaussian planes, md5 Rademacher planes) run the ``_srp_candidates``
+banding kernel. The md5 coins exist so a DuckDB oracle can reproduce
+every value of the pipeline.
+
 Scale notes: every pairwise step goes through an equi-join on a bucket
 key (band signature / LSH bucket), never an all-pairs product; candidate
-verification touches only bucket-collision pairs. Shingle-set columns
+verification touches only bucket-collision pairs. Over-full buckets are
+dropped by one whole-bucket cap (``_drop_hot``). Shingle-set columns
 stay with the doc (no driver collection).
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable, Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -96,6 +106,45 @@ def _spread(df: DataFrame, id_col: str) -> DataFrame:
     return df
 
 
+def _drop_hot(index: DataFrame, keys: list[str], cap: int) -> DataFrame:
+    """``index`` without the rows of every ``keys`` group holding more
+    than ``cap`` rows: one groupBy count, then an anti join against the
+    hot set. The hot set is tiny by construction (only boilerplate mass
+    exceeds a sane cap), and the drop is a pure function of the index —
+    no sampling, so capped pipelines keep their value oracles."""
+    hot = (
+        index.groupBy(*keys)
+        .agg(F.count(F.lit(1)).alias("_df"))
+        .filter(F.col("_df") > cap)
+        .select(*keys)
+    )
+    return index.join(broadcast_if_dim(hot, bounded=False, why="hot-set cardinality grows with the corpus; AQE decides"), keys, "left_anti")
+
+
+def _shingled(df: DataFrame, text_col: str, id_col: str, shingle_n: int) -> DataFrame:
+    """``(id, sh)`` distinct-shingle sets, spread over the cores."""
+    return _spread(df.select(F.col(id_col), F.col(text_col)), id_col).select(
+        F.col(id_col), word_shingles(F.col(text_col), shingle_n).alias("sh")
+    )
+
+
+def _band_pairs(banded: DataFrame, id_col: str) -> DataFrame:
+    """Distinct ``(id_a, id_b)``, id_a < id_b, colliding in any band of
+    an ``(id, band, band_sig)`` LSH index: one equi-self-join on the
+    bucket, never all-pairs."""
+    l, r = banded.alias("l"), banded.alias("r")
+    return (
+        l.join(
+            r,
+            (F.col("l.band") == F.col("r.band"))
+            & (F.col("l.band_sig") == F.col("r.band_sig"))
+            & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
+        )
+        .select(F.col(f"l.{id_col}").alias("id_a"), F.col(f"r.{id_col}").alias("id_b"))
+        .distinct()
+    )
+
+
 def shingle_index(
     df: DataFrame,
     text_col: str,
@@ -123,13 +172,7 @@ def shingle_index(
     )
     if max_doc_freq is None:
         return sh
-    hot = (
-        sh.groupBy("shingle")
-        .agg(F.count(F.lit(1)).alias("_df"))
-        .filter(F.col("_df") > max_doc_freq)
-        .select("shingle")
-    )
-    return sh.join(broadcast_if_dim(hot, bounded=False, why="hot-set cardinality grows with the corpus; AQE decides"), "shingle", "left_anti")
+    return _drop_hot(sh, ["shingle"], max_doc_freq)
 
 
 def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -147,20 +190,19 @@ def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     )
 
 
-def minhash_signatures(
-    df: DataFrame, text_col: str, id_col: str, num_hashes: int = 32, shingle_n: int = 3
-) -> DataFrame:
-    """MinHash signature per doc as ``sig: array<long>[num_hashes]``.
+def _xxhash_fold(sh: Column, num_hashes: int) -> Column:
+    """``array<long>[num_hashes]`` signature of a shingle array, h_i = min
+    over shingles of xxhash64(shingle, i).
 
     Single-pass array fold — NO explode, NO shuffle: ``aggregate`` walks
     the shingle array once, ``zip_with``+``least`` updates all
-    ``num_hashes`` running minima per shingle (h_i = min over shingles of
-    xxhash64(shingle, i)). ~14x faster than the explode+groupBy form and
-    embarrassingly parallel: signature state never leaves the doc's row.
+    ``num_hashes`` running minima per shingle. ~14x faster than the
+    explode+groupBy form and embarrassingly parallel: signature state
+    never leaves the doc's row.
     """
     long_max = (1 << 63) - 1
-    sig = F.aggregate(
-        word_shingles(F.col(text_col), shingle_n),
+    return F.aggregate(
+        sh,
         F.array_repeat(F.lit(long_max), num_hashes),
         lambda acc, s: F.zip_with(
             acc,
@@ -168,8 +210,82 @@ def minhash_signatures(
             lambda a, b: F.least(a, b),
         ),
     )
-    return _spread(df.select(F.col(id_col), F.col(text_col)), id_col).select(
-        F.col(id_col), sig.alias("sig")
+
+
+def _md5_fold(sh: Column, num_hashes: int) -> Column:
+    """The engine-portable signature of a shingle array: base(s) = first
+    15 hex digits of md5(shingle) as a 60-bit long, h_i(s) = base(s) XOR
+    :func:`md5_index_coin` (i), h_i = min over shingles.
+
+    ONE md5 per shingle instead of num_hashes of them: the per-index
+    functions are the XOR-shift family h_i = base ^ c_i — each a
+    bijection of the base hash, with constants hoisted driver-side — a
+    standard universal-hashing derivation whose LSH recall stays within
+    the xxhash parity band the Zipf test pins. Same single-pass fold as
+    :func:`_xxhash_fold`.
+    """
+    sentinel = 1 << 62  # above any 60-bit hash value
+    coins = [md5_index_coin(i) for i in range(num_hashes)]
+    # materialize the base hashes as their own array FIRST — one md5 per
+    # shingle structurally, rather than relying on subexpression
+    # elimination inside the fold lambda
+    bases = F.transform(
+        sh, lambda s: F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long")
+    )
+    return F.aggregate(
+        bases,
+        F.array_repeat(F.lit(sentinel).cast("long"), num_hashes),
+        lambda acc, b: F.zip_with(
+            acc,
+            F.array(*[b.bitwiseXOR(F.lit(c)) for c in coins]),
+            lambda a, x: F.least(a, x),
+        ),
+    )
+
+
+def _xxhash_band_key(band: int, rows: Column) -> Column:
+    """Band key of one signature slice: xxhash64(band, slice)."""
+    return F.xxhash64(F.lit(band), rows)
+
+
+def _md5_band_key(band: int, rows: Column) -> Column:
+    """Band key of one signature slice: the PLAIN space-joined decimal
+    string of its minima — no second hash, so the SQL twin is a
+    concat_ws of the same BIGINT minima. (The band index is the
+    posexplode position, so it need not enter the key.)"""
+    del band
+    return F.array_join(rows.cast("array<string>"), " ")
+
+
+def _banded(
+    sigs: DataFrame,
+    id_col: str,
+    num_hashes: int,
+    bands: int,
+    band_key: Callable[[int, Column], Column],
+) -> DataFrame:
+    """Exploded ``(id, band, band_sig)`` LSH index of an ``(id, sig)``
+    frame: ``bands`` slices of ``num_hashes // bands`` minima, each keyed
+    by ``band_key`` — at scale this is the table you'd write out and
+    bucket by (band, band_sig)."""
+    rows_per_band = num_hashes // bands
+    keys = F.array(
+        *[
+            band_key(b, F.slice(F.col("sig"), b * rows_per_band + 1, rows_per_band))
+            for b in range(bands)
+        ]
+    )
+    return sigs.select(F.col(id_col), F.posexplode(keys).alias("band", "band_sig"))
+
+
+def minhash_signatures(
+    df: DataFrame, text_col: str, id_col: str, num_hashes: int = 32, shingle_n: int = 3
+) -> DataFrame:
+    """MinHash signature per doc as ``sig: array<long>[num_hashes]``
+    (h_i = min over shingles of xxhash64(shingle, i); see
+    :func:`_xxhash_fold`)."""
+    return _shingled(df, text_col, id_col, shingle_n).select(
+        F.col(id_col), _xxhash_fold(F.col("sh"), num_hashes).alias("sig")
     )
 
 
@@ -181,25 +297,19 @@ def _minhash_banded(
     bands: int,
     shingle_n: int,
 ) -> DataFrame:
-    """Exploded ``(id, band, band_sig)`` LSH index shared by the pair
-    join and the hot-bucket report — at scale this is the table you'd
-    write out and bucket by (band, band_sig)."""
-    rows_per_band = num_hashes // bands
+    """Exploded ``(id, band, band_sig)`` xxhash64 LSH index shared by the
+    incremental screen and the hot-bucket report."""
     sigs = minhash_signatures(df, text_col, id_col, num_hashes, shingle_n)
-    band_cols = F.array(
-        *[
-            F.xxhash64(F.lit(b), F.slice(F.col("sig"), b * rows_per_band + 1, rows_per_band))
-            for b in range(bands)
-        ]
-    )
-    return sigs.select(F.col(id_col), F.posexplode(band_cols).alias("band", "band_sig"))
+    return _banded(sigs, id_col, num_hashes, bands, _xxhash_band_key)
 
 
 def _hot_bucket_report(banded: DataFrame, max_bucket_size: int) -> DataFrame:
     """(band, band_sig, bucket_size, pairs_skipped) for every bucket of
     a prebuilt banded index exceeding ``max_bucket_size`` — the single
-    definition both the capped join and the user-facing report derive
-    from, so the two views can never disagree on parameterization."""
+    definition of the user-facing report. The capped join drops exactly
+    these buckets (``_drop_hot`` over the same index with the same
+    ``count > cap`` predicate), so the two views can never disagree on
+    parameterization."""
     sz = F.col("bucket_size")
     return (
         banded.groupBy("band", "band_sig")
@@ -295,7 +405,7 @@ def minhash_dedup_pairs_with_report(
     exactly :func:`minhash_dedup_pairs` with ``max_bucket_size`` set and
     ``hot_buckets`` is :func:`minhash_hot_buckets` — guaranteed to share
     the banding parameterization (and the cached index) with the join,
-    because both are derived from the same ``_minhash_banded`` table.
+    because both are derived from the same banded index.
     This is the production entry point for capped runs: the cap is never
     silent, and the report can never describe different buckets than the
     join skipped."""
@@ -313,41 +423,33 @@ def _minhash_core(
     bands: int,
     shingle_n: int,
     max_bucket_size: int | None,
+    fold: Callable[[Column, int], Column] = _xxhash_fold,
+    band_key: Callable[[int, Column], Column] = _xxhash_band_key,
 ) -> tuple[DataFrame, DataFrame | None]:
-    """Shared pipeline behind the pair join and the hot-bucket report.
+    """The one MinHash pipeline — band → cap → self-join → exact-Jaccard
+    verify — behind every MinHash pair function. ``fold`` and
+    ``band_key`` pick the coin: xxhash64 (the default), or the md5 coin
+    of :func:`minhash_md5_pairs` that the SQL twin reproduces.
 
-    Returns (verified_pairs, hot_report_or_None). The banded index and
-    the shingle sets are persisted through ``track``, so
-    ``release_session_caches()`` frees them (SCALING.md's cache
-    contract)."""
-    # The banded table is the LSH index: persist BEFORE deriving the
-    # hot-bucket set so the signature pipeline materializes exactly once
-    # — the bucket-size aggregation, and both sides of the candidate
-    # self-join, all read the same cached index.
-    banded = track(_minhash_banded(df, text_col, id_col, num_hashes, bands, shingle_n))
+    Returns (verified_pairs, hot_report_or_None). ONE ``(id, sh, sig)``
+    frame is persisted through ``track``, so ``release_session_caches()``
+    frees it (SCALING.md's cache contract): the bucket census, both sides
+    of the candidate self-join and the verify all read it, so the corpus
+    is shingled and signed exactly once."""
+    frame = track(
+        _shingled(df, text_col, id_col, shingle_n).select(
+            F.col(id_col), "sh", fold(F.col("sh"), num_hashes).alias("sig")
+        )
+    )
+    banded = _banded(frame, id_col, num_hashes, bands, band_key)
     report = None
     if max_bucket_size is not None:
         report = _hot_bucket_report(banded, max_bucket_size)
-        hot = report.select("band", "band_sig")
-        banded = banded.join(broadcast_if_dim(hot, bounded=False, why="hot-set cardinality grows with the corpus; AQE decides"), ["band", "band_sig"], "left_anti")
-    left = banded.alias("l")
-    right = banded.alias("r")
-    cands = (
-        left.join(
-            right,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.band_sig") == F.col("r.band_sig"))
-            & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
-        )
-        .select(F.col(f"l.{id_col}").alias("id_a"), F.col(f"r.{id_col}").alias("id_b"))
-        .distinct()
-    )
-    shingle_sets = track(_spread(df.select(F.col(id_col), F.col(text_col)), id_col).select(
-        F.col(id_col), word_shingles(F.col(text_col), shingle_n).alias("sh")
-    ))
+        banded = _drop_hot(banded, ["band", "band_sig"], max_bucket_size)
     verified = (
-        cands.join(shingle_sets.select(F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a")), "id_a")
-        .join(shingle_sets.select(F.col(id_col).alias("id_b"), F.col("sh").alias("sh_b")), "id_b")
+        _band_pairs(banded, id_col)
+        .join(frame.select(F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a")), "id_a")
+        .join(frame.select(F.col(id_col).alias("id_b"), F.col("sh").alias("sh_b")), "id_b")
         .withColumn(
             "jaccard",
             F.size(F.array_intersect("sh_a", "sh_b"))
@@ -373,11 +475,9 @@ def minhash_index(
     Write both out (bucketed by (band, band_sig) at scale) and screen
     arrivals against them with :func:`minhash_pairs_incremental` — the
     corpus is hashed ONCE, never re-self-joined per ingest."""
-    banded = _minhash_banded(df, text_col, id_col, num_hashes, bands, shingle_n)
-    shingles = _spread(df.select(F.col(id_col), F.col(text_col)), id_col).select(
-        F.col(id_col), word_shingles(F.col(text_col), shingle_n).alias("sh")
-    )
-    return banded, shingles
+    shingles = _shingled(df, text_col, id_col, shingle_n)
+    sigs = shingles.select(F.col(id_col), _xxhash_fold(F.col("sh"), num_hashes).alias("sig"))
+    return _banded(sigs, id_col, num_hashes, bands, _xxhash_band_key), shingles
 
 
 def minhash_pairs_incremental(
@@ -454,52 +554,18 @@ def minhash_md5_signatures(
     num_hashes: int = 16,
     shingle_n: int = 3,
 ) -> DataFrame:
-    """MinHash signatures on the ENGINE-PORTABLE md5 coin (round-7
-    VERDICT #3): a 60-bit base value ``base(s)`` = first 15 hex digits
-    of md5(shingle), and h_i(s) = base(s) XOR c_i where c_i is the
-    fixed 60-bit constant md5("mh:<i>")[:15] — the hash_coin /
-    token_bucket md5 road, so ANY SQL engine reproduces the identical
-    signature, banded candidate set, and therefore verified pair list.
-    The xxhash64 variant (:func:`minhash_signatures`) stays the
-    production default (JVM-native hash, ~md5-free per-shingle cost);
-    this twin exists so the flagship near-dup operator has a FULL
-    value-equality oracle instead of a rows-only grade — recall parity
-    between the two coins is pinned on the Zipf corpus
-    (tests/test_zipf_dedup.py).
-
-    Round-11 perf: ONE md5 per shingle instead of num_hashes of them
-    (the SRP coin-hoisting move applied here). The per-index functions
-    are the XOR-shift family h_i = base ^ c_i — each a bijection of the
-    base hash, with constants that are themselves md5 digits (hoisted
-    driver-side with hashlib, bit-identical in SQL) — a standard
-    universal-hashing derivation whose LSH recall stays within the
-    xxhash parity band the Zipf test pins (re-verified on landing).
-    16× fewer md5 evaluations was the dominant cost of the whole
-    pipeline on BOTH engines.
-
-    Same single-pass array fold as the xxhash64 form: NO explode, NO
-    shuffle; per-doc state never leaves the row.
+    """MinHash signatures on the ENGINE-PORTABLE md5 coin (see
+    :func:`_md5_fold`): the hash_coin / token_bucket md5 road, so ANY SQL
+    engine reproduces the identical signature, banded candidate set, and
+    therefore verified pair list. The xxhash64 variant
+    (:func:`minhash_signatures`) stays the production default
+    (JVM-native hash, ~md5-free per-shingle cost); this coin exists so
+    the flagship near-dup operator has a FULL value-equality oracle
+    instead of a rows-only grade — recall parity between the two coins
+    is pinned on the Zipf corpus (tests/test_zipf_dedup.py).
     """
-    sentinel = 1 << 62  # above any 60-bit hash value
-    coins = [md5_index_coin(i) for i in range(num_hashes)]
-    # materialize the base hashes as their own array FIRST — one md5 per
-    # shingle structurally, rather than relying on subexpression
-    # elimination inside the fold lambda
-    bases = F.transform(
-        word_shingles(F.col(text_col), shingle_n),
-        lambda s: F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long"),
-    )
-    sig = F.aggregate(
-        bases,
-        F.array_repeat(F.lit(sentinel).cast("long"), num_hashes),
-        lambda acc, b: F.zip_with(
-            acc,
-            F.array(*[b.bitwiseXOR(F.lit(c)) for c in coins]),
-            lambda a, x: F.least(a, x),
-        ),
-    )
-    return _spread(df.select(F.col(id_col), F.col(text_col)), id_col).select(
-        F.col(id_col), sig.alias("sig")
+    return _shingled(df, text_col, id_col, shingle_n).select(
+        F.col(id_col), _md5_fold(F.col("sh"), num_hashes).alias("sig")
     )
 
 
@@ -518,97 +584,37 @@ def minhash_md5_pairs(
     (id_a, id_b, jaccard), id_a < id_b, jaccard >= threshold, no false
     positives; recall = the (bands, rows) LSH curve).
 
-    Band keys are the PLAIN space-joined decimal strings of each band's
-    signature slice — no second hash, so the SQL twin is a concat_ws of
-    the same BIGINT minima. Every value here (md5 → 60-bit long → min →
-    string key → equi-join → exact Jaccard) is reproducible in ANSI-ish
-    SQL, which is the whole point: a driver grade of the catalog entry
-    is a value-equality proof over the complete LSH pipeline, not just a
-    row count.
+    The same pipeline as :func:`minhash_dedup_pairs` (``_minhash_core``)
+    with the md5 signature fold and band keys that are the PLAIN
+    space-joined decimal strings of each band's signature slice. Every
+    value here (md5 → 60-bit long → min → string key → equi-join → exact
+    Jaccard) is reproducible in ANSI-ish SQL, which is the whole point: an
+    oracle grade of the catalog entry is a value-equality proof over the
+    complete LSH pipeline, not just a row count.
 
     ``max_bucket_size`` applies the same WHOLE-BUCKET drop as
-    :func:`minhash_dedup_pairs`: a (band, band_key) bucket holding more
-    than the cap is excluded from the candidate join entirely (broadcast
-    anti join on the tiny hot set). The drop is a pure function of the
+    :func:`minhash_dedup_pairs`. The drop is a pure function of the
     deterministic signatures — no coin, no sampling — so the capped
-    pipeline keeps the full cross-engine value oracle (round-8 VERDICT
-    #5: the capped production entry's grade becomes a value proof of the
-    cap mechanism itself, not a rows-only count).
+    pipeline keeps the full cross-engine value oracle: the capped
+    production entry's grade is a value proof of the cap mechanism
+    itself, not a rows-only count.
 
     Ids are assumed non-null (the corpus primary key): rows with a null
     ``id_col`` are filtered out before signing, so they never enter the
     bucket census, the cap, or the pair output.
     """
-    rows_per_band = num_hashes // bands
-    # Round-15 (guide §6, duplicate-scan elimination): the candidate
-    # self-join's planner-inserted isnotnull(id) made the join sides'
-    # subtree differ from the bucket census's, so the census re-scanned
-    # the corpus and recomputed the whole signature pipeline on its own
-    # spread exchange. Hoisting the filter (a no-op: the id is the
-    # corpus primary key, and null ids could never join anyway) gives
-    # every banded consumer ONE canonical subtree — the runtime-final
-    # plan drops from 2 corpus scans to 1 with the census riding the
-    # shared spread via AQE stage reuse. Flat at sf0.1 (min 1.131 vs
-    # 1.150 s over 12 alternating runs); at scale it halves the corpus
-    # reads this operator pays. Values identical (225 pairs, probe).
-    sigs = minhash_md5_signatures(
-        df.filter(F.col(id_col).isNotNull()), text_col, id_col, num_hashes, shingle_n
-    )
-    band_keys = F.array(
-        *[
-            F.array_join(
-                F.slice(F.col("sig"), b * rows_per_band + 1, rows_per_band).cast(
-                    "array<string>"
-                ),
-                " ",
-            )
-            for b in range(bands)
-        ]
-    )
-    banded = sigs.select(
-        F.col(id_col), F.posexplode(band_keys).alias("band", "band_key")
-    )
-    if max_bucket_size is not None:
-        hot = (
-            banded.groupBy("band", "band_key")
-            .agg(F.count(F.lit(1)).alias("bucket_size"))
-            .filter(F.col("bucket_size") > max_bucket_size)
-            .select("band", "band_key")
-        )
-        banded = banded.join(broadcast_if_dim(hot, bounded=False, why="hot-set cardinality grows with the corpus; AQE decides"), ["band", "band_key"], "left_anti")
-    left, right = banded.alias("l"), banded.alias("r")
-    cands = (
-        left.join(
-            right,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.band_key") == F.col("r.band_key"))
-            & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
-        )
-        .select(
-            F.col(f"l.{id_col}").alias("id_a"), F.col(f"r.{id_col}").alias("id_b")
-        )
-        .distinct()
-    )
-    shingle_sets = _spread(df.select(F.col(id_col), F.col(text_col)), id_col).select(
-        F.col(id_col), word_shingles(F.col(text_col), shingle_n).alias("sh")
-    )
-    return (
-        cands.join(
-            shingle_sets.select(F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a")),
-            "id_a",
-        )
-        .join(
-            shingle_sets.select(F.col(id_col).alias("id_b"), F.col("sh").alias("sh_b")),
-            "id_b",
-        )
-        .withColumn(
-            "jaccard",
-            F.size(F.array_intersect("sh_a", "sh_b"))
-            / F.size(F.array_union("sh_a", "sh_b")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
-    )
+    return _minhash_core(
+        df.filter(F.col(id_col).isNotNull()),
+        text_col,
+        id_col,
+        threshold,
+        num_hashes,
+        bands,
+        shingle_n,
+        max_bucket_size,
+        fold=_md5_fold,
+        band_key=_md5_band_key,
+    )[0]
 
 
 def contamination_pairs(
@@ -896,6 +902,75 @@ def ngram_jaccard_pairs(
     )
 
 
+def _srp_candidates(
+    df: DataFrame,
+    vec_col: str,
+    id_col: str,
+    planes: Sequence[Sequence[float]],
+    bands: int,
+    max_bucket_size: int | None,
+) -> DataFrame:
+    """The one banded SRP-LSH kernel: distinct candidate pairs
+    ``(id_a, id_b, _va, _vb)``, id_a < id_b, with both vectors attached
+    for the caller's exact-cosine verify.
+
+    ``planes`` is the hyperplane matrix (one row per sign bit, ``dim``
+    entries each), injected as a literal: ``transform`` over it folds
+    each plane against the vector in ONE expression (pure codegen, no
+    UDF, a LEFT FOLD from a 0.0 seed, so IEEE summation order is fixed
+    and matches any engine folding the same way). The sign bits are
+    packed into ``bands`` r-bit band signatures, r = len(planes)/bands;
+    the banded frame is persisted through ``track`` (it feeds the
+    hot-bucket census plus both self-join sides — three reads).
+
+    ``max_bucket_size`` drops whole over-full (band, band_sig) buckets:
+    r-bit signatures give only 2^r buckets per band, so on UNSTRUCTURED
+    corpora bucket occupancy grows ~n/2^r and the candidate self-join
+    grows QUADRATICALLY in corpus size — the cap bounds it structurally.
+    On dup-structured corpora genuine near-dup clusters are small and
+    survive; uniform mass is what sheds.
+    """
+    r_bits = len(planes) // bands
+    vec = F.col(vec_col).cast("array<double>")
+    planes_lit = F.array(
+        *[F.array(*[F.lit(float(x)) for x in row]) for row in planes]
+    )
+    dots = F.transform(
+        planes_lit,
+        lambda p: F.aggregate(
+            F.zip_with(vec, p, lambda a, b: a * b),
+            F.lit(0.0),
+            lambda acc, x: acc + x,
+        ),
+    )
+    band_sigs = F.array(
+        *[
+            sum(
+                (
+                    F.when(
+                        F.element_at("_dots", b * r_bits + j + 1) > 0,
+                        F.lit(1 << j),
+                    ).otherwise(F.lit(0))
+                    for j in range(r_bits)
+                ),
+                F.lit(0),
+            )
+            for b in range(bands)
+        ]
+    )
+    banded = track(df.select(F.col(id_col), dots.alias("_dots")).select(
+        F.col(id_col), F.posexplode(band_sigs).alias("band", "band_sig")
+    ))
+    if max_bucket_size is not None:
+        banded = _drop_hot(banded, ["band", "band_sig"], max_bucket_size)
+    vecs = df.select(F.col(id_col), F.col(vec_col))
+    return (
+        _band_pairs(banded, id_col)
+        .join(vecs.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("_va")), "id_a")
+        .join(vecs.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("_vb")), "id_b")
+    )
+
+
 def embedding_dup_pairs(
     df: DataFrame,
     vec_col: str,
@@ -919,8 +994,9 @@ def embedding_dup_pairs(
     16-bit full-signature bucket. ``r`` sets bucket granularity (2^r
     buckets per band bounds unrelated-pair collisions), ``b`` buys back
     recall: at corpus scale raise BOTH (r=16, b=12 keeps recall ≈0.90
-    with 65536 buckets per band). Planes are a deterministic function of
-    (seed, dim) so runs reproduce.
+    with 65536 buckets per band). Planes are Gaussian, a deterministic
+    function of (seed, dim) so runs reproduce. ``max_bucket_size`` is the
+    whole-bucket drop of :func:`_srp_candidates`.
     """
     import numpy as np
 
@@ -928,7 +1004,6 @@ def embedding_dup_pairs(
 
     if num_planes % bands != 0:
         raise ValueError("num_planes must be divisible by bands")
-    r_bits = num_planes // bands
     if dim is None:
         # One-row peek only as a fallback; callers on hot paths should pass
         # dim explicitly (schema metadata can't carry array length).
@@ -942,72 +1017,9 @@ def embedding_dup_pairs(
                 ).limit(0)
             )
         dim = len(row[0])
-    rng = np.random.default_rng(seed)
-    planes = rng.standard_normal((num_planes, dim))
-    vec = F.col(vec_col).cast("array<double>")
-    # All num_planes dot products in ONE expression: transform over the
-    # plane-matrix literal folds each plane against the vector (pure
-    # codegen, no UDF, one pass per plane).
-    planes_lit = F.array(
-        *[F.array(*[F.lit(float(x)) for x in row]) for row in planes]
-    )
-    dots = F.transform(
-        planes_lit,
-        lambda p: F.aggregate(
-            F.zip_with(vec, p, lambda a, b: a * b),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ),
-    )
-    with_dots = df.select(F.col(id_col), dots.alias("_dots"))
-    band_sigs = F.array(
-        *[
-            sum(
-                (
-                    F.when(
-                        F.element_at("_dots", b * r_bits + j + 1) > 0,
-                        F.lit(1 << j),
-                    ).otherwise(F.lit(0))
-                    for j in range(r_bits)
-                ),
-                F.lit(0),
-            )
-            for b in range(bands)
-        ]
-    )
-    banded = track(with_dots.select(
-        F.col(id_col), F.posexplode(band_sigs).alias("band", "band_sig")
-    ))
-    if max_bucket_size is not None:
-        # Same whole-bucket drop as embedding_dup_md5_pairs: bounds the
-        # per-(band, band_sig) self-join fan-out, which goes quadratic
-        # on unstructured corpora when 2^r buckets per band is small.
-        hot = (
-            banded.groupBy("band", "band_sig")
-            .agg(F.count(F.lit(1)).alias("bucket_size"))
-            .filter(F.col("bucket_size") > max_bucket_size)
-            .select("band", "band_sig")
-        )
-        banded = banded.join(broadcast_if_dim(hot, bounded=False, why="hot-set cardinality grows with the corpus; AQE decides"), ["band", "band_sig"], "left_anti")
-    l, r = banded.alias("l"), banded.alias("r")
-    cands = (
-        l.join(
-            r,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.band_sig") == F.col("r.band_sig"))
-            & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
-        )
-        .select(F.col(f"l.{id_col}").alias("id_a"), F.col(f"r.{id_col}").alias("id_b"))
-        .distinct()
-    )
-    vecs = df.select(F.col(id_col), F.col(vec_col))
+    planes = np.random.default_rng(seed).standard_normal((num_planes, dim))
     return (
-        cands.join(
-            vecs.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("_va")), "id_a"
-        )
-        .join(
-            vecs.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("_vb")), "id_b"
-        )
+        _srp_candidates(df, vec_col, id_col, planes, bands, max_bucket_size)
         .select(
             "id_a",
             "id_b",
@@ -1030,7 +1042,7 @@ def embedding_dup_md5_pairs(
     """Embedding near-dup via banded SRP-LSH on the ENGINE-PORTABLE md5
     coin — the :func:`minhash_md5_pairs` move applied to the hyperplane
     family, so the LAST rows-only approximate-dedup shape gains a FULL
-    value-equality oracle (round-8 VERDICT #5).
+    value-equality oracle.
 
     Plane p's component d is a Rademacher ±1 coin (a standard signed
     random projection; Achlioptas 2003 shows ±1 entries preserve the
@@ -1043,20 +1055,16 @@ def embedding_dup_md5_pairs(
     both engines fold double products left-to-right from a 0.0 seed:
     identical op sequence → bit-identical doubles → identical signs.
 
-    The Gaussian-plane variant (:func:`embedding_dup_pairs`) stays the
-    production default with recall pinned by tests/test_dedup.py. Same
-    scale shape as all LSH here: banded equi-join on (band, band_sig),
-    never all-pairs.
+    The coin is a pure function of (plane, dim) — NOT of the row — so it
+    is hoisted driver-side with hashlib.md5 (bit-identical to
+    Spark's/DuckDB's md5 of the same string) and injected as literal
+    ±1.0 arrays; Spark pays no md5 per row, while the DuckDB oracle still
+    derives the same coins via md5() in SQL.
 
-    Perf (round-10, ADVICE + VERDICT #2): the coin is a pure function of
-    (plane, dim) — NOT of the row — so it is hoisted driver-side with
-    hashlib.md5 (bit-identical to Spark's/DuckDB's md5 of the same
-    string) and injected as literal ±1.0 arrays; Spark no longer pays
-    num_planes*dim md5 calls PER ROW (11.4 s → sub-second at the 32×
-    probe). The banded frame is persisted (it feeds the hot-bucket
-    census plus both self-join sides — three reads). The left-fold
-    summation order is unchanged, so doubles stay bit-identical to the
-    DuckDB oracle, which still derives the same coins via md5() in SQL.
+    The Gaussian-plane variant (:func:`embedding_dup_pairs`) stays the
+    production default with recall pinned by tests/test_dedup.py; both
+    run the same banding kernel (:func:`_srp_candidates`). This verify
+    filters on the RAW cosine and rounds only the reported value.
     """
     import hashlib
 
@@ -1064,82 +1072,15 @@ def embedding_dup_md5_pairs(
 
     if num_planes % bands != 0:
         raise ValueError("num_planes must be divisible by bands")
-    r_bits = num_planes // bands
-    vec = F.col(vec_col).cast("array<double>")
 
     def _coin(p: int, d: int) -> float:
         h = hashlib.md5(f"srp:{p}:{d}".encode()).hexdigest()
         return 1.0 if int(h[0], 16) % 2 == 1 else -1.0
 
-    coins_lit = F.array(
-        *[
-            F.array(*[F.lit(_coin(p, d)) for d in range(dim)])
-            for p in range(num_planes)
-        ]
-    )
-    dots = F.transform(
-        coins_lit,
-        lambda c: F.aggregate(
-            F.zip_with(vec, c, lambda a, b: a * b),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ),
-    )
-    with_dots = df.select(F.col(id_col), dots.alias("_dots"))
-    band_sigs = F.array(
-        *[
-            sum(
-                (
-                    F.when(
-                        F.element_at("_dots", b * r_bits + j + 1) > 0,
-                        F.lit(1 << j),
-                    ).otherwise(F.lit(0))
-                    for j in range(r_bits)
-                ),
-                F.lit(0),
-            )
-            for b in range(bands)
-        ]
-    )
-    banded = track(with_dots.select(
-        F.col(id_col), F.posexplode(band_sigs).alias("band", "band_sig")
-    ))
-    if max_bucket_size is not None:
-        # Whole-bucket drop, the minhash_md5_pairs cap: r-bit signatures
-        # give only 2^r buckets per band, so on UNSTRUCTURED (random)
-        # corpora bucket occupancy grows ~n/2^r and the candidate
-        # self-join grows QUADRATICALLY in corpus size — the cap bounds
-        # it structurally and, being a pure function of the
-        # deterministic signatures, keeps the full cross-engine value
-        # oracle. On dup-structured corpora genuine near-dup clusters
-        # are small and survive; uniform mass is what sheds.
-        hot = (
-            banded.groupBy("band", "band_sig")
-            .agg(F.count(F.lit(1)).alias("bucket_size"))
-            .filter(F.col("bucket_size") > max_bucket_size)
-            .select("band", "band_sig")
-        )
-        banded = banded.join(broadcast_if_dim(hot, bounded=False, why="hot-set cardinality grows with the corpus; AQE decides"), ["band", "band_sig"], "left_anti")
-    l, r = banded.alias("l"), banded.alias("r")
-    cands = (
-        l.join(
-            r,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.band_sig") == F.col("r.band_sig"))
-            & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
-        )
-        .select(F.col(f"l.{id_col}").alias("id_a"), F.col(f"r.{id_col}").alias("id_b"))
-        .distinct()
-    )
-    vecs = df.select(F.col(id_col), F.col(vec_col))
+    planes = [[_coin(p, d) for d in range(dim)] for p in range(num_planes)]
     raw_cos = cosine_similarity(F.col("_va"), F.col("_vb"))
     return (
-        cands.join(
-            vecs.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("_va")), "id_a"
-        )
-        .join(
-            vecs.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("_vb")), "id_b"
-        )
+        _srp_candidates(df, vec_col, id_col, planes, bands, max_bucket_size)
         .filter(raw_cos >= threshold)
         .select("id_a", "id_b", F.round(raw_cos, 6).alias("cosine"))
     )
@@ -1370,13 +1311,7 @@ def shared_span_pairs(
     """
     sel = winnowed_fingerprints(docs, text_col, id_col, k, w)
     if max_doc_freq is not None:
-        hot = (
-            sel.groupBy("fp")
-            .agg(F.count(F.lit(1)).alias("_df"))
-            .filter(F.col("_df") > max_doc_freq)
-            .select("fp")
-        )
-        sel = sel.join(broadcast_if_dim(hot, bounded=False, why="hot-set cardinality grows with the corpus; AQE decides"), "fp", "left_anti")
+        sel = _drop_hot(sel, ["fp"], max_doc_freq)
     a = sel.select(F.col(id_col).alias("doc_a"), F.col("fp").alias("fp_a"))
     b = sel.select(F.col(id_col).alias("doc_b"), F.col("fp").alias("fp_b"))
     return (
@@ -1416,13 +1351,7 @@ def shared_span_regions(
     """
     sel = winnowed_fingerprints(docs, text_col, id_col, k, w, include_pos=True)
     if max_doc_freq is not None:
-        hot = (
-            sel.groupBy("fp")
-            .agg(F.count(F.lit(1)).alias("_df"))
-            .filter(F.col("_df") > max_doc_freq)
-            .select("fp")
-        )
-        sel = sel.join(broadcast_if_dim(hot, bounded=False, why="hot-set cardinality grows with the corpus; AQE decides"), "fp", "left_anti")
+        sel = _drop_hot(sel, ["fp"], max_doc_freq)
     a = sel.select(
         F.col(id_col).alias("doc_a"), F.col("fp").alias("fp_a"), F.col("pos").alias("pos_a")
     )
@@ -1474,13 +1403,7 @@ def shared_span_pairs_incremental(
     """
     new_prints = winnowed_fingerprints(new_docs, text_col, id_col, k, w)
     if max_doc_freq is not None:
-        hot = (
-            corpus_prints.groupBy("fp")
-            .agg(F.count(F.lit(1)).alias("_df"))
-            .filter(F.col("_df") > max_doc_freq)
-            .select("fp")
-        )
-        corpus_prints = corpus_prints.join(broadcast_if_dim(hot, bounded=False, why="hot-set cardinality grows with the corpus; AQE decides"), "fp", "left_anti")
+        corpus_prints = _drop_hot(corpus_prints, ["fp"], max_doc_freq)
     n = new_prints.select(F.col(id_col).alias("new_id"), F.col("fp").alias("fp_n"))
     c = corpus_prints.select(
         F.col(id_col).alias("corpus_id"), F.col("fp").alias("fp_c")

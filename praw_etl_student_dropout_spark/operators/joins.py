@@ -69,27 +69,6 @@ def star_join(
     return out
 
 
-def surrogate_key_join(
-    facts: DataFrame,
-    dim: DataFrame,
-    natural_key: str,
-    surrogate_key: str,
-    fact_key: str | None = None,
-) -> DataFrame:
-    """J2 — natural→surrogate key swap via broadcast hash join.
-
-    Replaces the reference's driver-side dict + iterrows loop
-    (etl_pipeline.py:95-119) — the canonical anti-pattern at scale —
-    with a broadcast join that attaches ``surrogate_key`` and drops the
-    natural key. ``fact_key`` names the fact column when it differs from
-    the dim's natural key column.
-    """
-    fact_col = fact_key or natural_key
-    cond = facts[fact_col] == dim[natural_key]
-    out = facts.join(F.broadcast(dim.select(natural_key, surrogate_key)), cond, "left")
-    return out.drop(dim[natural_key]).drop(fact_col)
-
-
 def anti_join_new_keys(new_rows: DataFrame, existing: DataFrame, keys: list[str]) -> DataFrame:
     """J3 — rows of ``new_rows`` whose key is absent from ``existing``
     (INSERT IGNORE, etl_pipeline.py:97,106,122). Left-anti join; Catalyst

@@ -14,6 +14,7 @@ from praw_etl_student_dropout_spark.operators.dedup import (
     jaccard_prefix_pairs,
     minhash_dedup_pairs,
     minhash_dedup_pairs_with_report,
+    minhash_md5_pairs,
     ngram_jaccard_pairs,
     shingle_containment_pairs,
     simhash_dup_pairs,
@@ -657,6 +658,10 @@ LAZY_CACHING_OPS = {
     "minhash_with_report": lambda d, e, p: list(
         minhash_dedup_pairs_with_report(d, "text", "doc_id", max_bucket_size=50)
     ),
+    "minhash_md5": lambda d, e, p: [minhash_md5_pairs(d, "text", "doc_id")],
+    "minhash_md5_capped": lambda d, e, p: [
+        minhash_md5_pairs(d, "text", "doc_id", max_bucket_size=2)
+    ],
     "embedding_capped": lambda d, e, p: [
         embedding_dup_pairs(e, "embedding", "vec_id", dim=64, max_bucket_size=600)
     ],
@@ -693,13 +698,25 @@ def test_lazy_operator_caches_are_released(spark, sf_dir, tmp_path, op):
     assert cached() <= before
 
 
-def test_minhash_md5_capped_single_corpus_scan(spark, sf_dir, tmp_path):
-    """Round-15 (guide §6): the capped md5 pipeline's bucket census must
-    ride the SAME spread exchange as the candidate self-join — the
-    hoisted isnotnull(id) gives every banded consumer one canonical
-    subtree, so the runtime-final plan reads the corpus ONCE. A second
-    FileScan means the census regressed to its own scan + signature
-    recompute (2x corpus I/O at scale).
+CAPPED_MINHASH = {
+    "md5": lambda docs: minhash_md5_pairs(
+        docs, "text", "doc_id", threshold=0.2, num_hashes=16, bands=8,
+        max_bucket_size=2,
+    ),
+    "xxhash": lambda docs: minhash_dedup_pairs(
+        docs, "text", "doc_id", max_bucket_size=2
+    ),
+}
+
+
+@pytest.mark.parametrize("coin", list(CAPPED_MINHASH))
+def test_minhash_md5_capped_single_corpus_scan(spark, sf_dir, tmp_path, coin):
+    """The capped MinHash pipeline shingles and signs the corpus ONCE:
+    the bucket census, both candidate self-join sides and the verify all
+    read the one tracked (id, sh, sig) frame, so the runtime-final plan
+    reads the corpus once and (md5 coin) evaluates md5 once. A second
+    FileScan or md5 means a consumer recomputes the signature pipeline
+    on its own (2x corpus I/O and hashing at scale).
 
     The corpus is read from a test-unique COPY of the fixture: earlier
     tests leave persisted shingle/index frames alive, and the
@@ -709,20 +726,17 @@ def test_minhash_md5_capped_single_corpus_scan(spark, sf_dir, tmp_path):
     such caches)."""
     import shutil
 
-    from praw_etl_student_dropout_spark.operators.dedup import minhash_md5_pairs
-
     iso = tmp_path / "documents.parquet"
     shutil.copy(f"{sf_dir}/documents.parquet", iso)
     docs = spark.read.parquet(str(iso))
-    pairs = minhash_md5_pairs(
-        docs, "text", "doc_id", threshold=0.2, num_hashes=16, bands=8,
-        max_bucket_size=2,
-    )
+    pairs = CAPPED_MINHASH[coin](docs)
     pairs.collect()  # AQE reuse is a runtime decision
     final = (
         pairs._jdf.queryExecution().executedPlan().toString()
         .split("== Initial Plan ==")[0]
     )
     assert final.count("Scan parquet") == 1, (
-        "bucket census re-scans the corpus instead of reusing the spread"
+        "a consumer re-scans the corpus instead of reading the tracked frame"
     )
+    if coin == "md5":
+        assert final.count("md5(") == 1, "the md5 signature is evaluated more than once"
