@@ -1,18 +1,27 @@
 """Similarity search over embedding columns (SURVEY.md §2.9 U7 ⊕).
 
-Two paths:
-- ``brute_force_topk``: exact cosine top-k. The query set is broadcast
-  (queries are few; the corpus is the 100 TB side), scores are computed
-  with codegen'd ``zip_with``/``aggregate`` array math, and per-query
-  top-k goes through a window — the corpus is scanned once, never
-  collected.
-- ``ivf_topk``: IVF-style approximate search. Corpus vectors are
-  assigned to their nearest centroid ONCE (an O(n·k) narrow map with the
-  centroid table broadcast); queries probe only the ``nprobe`` nearest
-  centroid partitions, turning the scan into an equi-join on
-  centroid_id. This is the standard inverted-file ANN layout; at scale
-  the corpus would be written partitioned by centroid_id so probes
-  become partition-pruned scans.
+The seven top-k operators (``brute_force_topk``, ``hard_negative_topk``,
+``ivf_topk``, ``pq_topk``, ``ivfpq_topk``, ``int8_topk``,
+``ivf_int8_topk``) are one search pipeline, route → score → top-k,
+assembled from shared private stages:
+
+- route (IVF only): ``_probes`` picks each query's ``nprobe`` nearest
+  centroids — a tiny broadcast |Q|×|C| scoring — so the probed corpus
+  is an equi-join on centroid_id touching ~nprobe/num_centroids of it.
+  The corpus is assigned to its nearest centroid once
+  (``assign_centroids``, an O(n·k) narrow map); at scale it is written
+  partitioned by centroid_id so probes become partition-pruned scans.
+  Without routing the query set is broadcast against one corpus scan.
+- score: exact cosine with per-row norms hoisted out of the pair loop
+  (``_cosine_scored``); asymmetric distance computation over PQ codes
+  (``_adc_lut`` per query, ``_adc_score`` per corpus row) followed by
+  an exact-cosine re-rank of the candidates (``_exact_rerank``); or
+  the integer quantized cosine of int8 vectors (``_qcos_topk``).
+- top-k: ``_topk`` ranks per query by (score desc, corpus id asc), a
+  deterministic total order, and keeps rank <= k.
+
+The corpus is scanned once and never collected; the only broadcast or
+collected state is centroid tables and PQ codebooks, both sketch-sized.
 """
 
 from __future__ import annotations
@@ -23,12 +32,44 @@ from pyspark.sql import functions as F
 from ..functions.arrays import cosine_from_norms, cosine_similarity, dot_product, l2_norm
 
 
-def _score(metric: str, q: F.Column, c: F.Column) -> F.Column:
-    if metric == "cosine":
-        return cosine_similarity(q, c)
-    if metric == "dot":
-        return dot_product(q, c)
-    raise ValueError(f"unknown metric {metric!r}")
+def _topk(
+    scored: DataFrame, query_id: str, corpus_id: str, score_col: str, k: int
+) -> DataFrame:
+    """Per-query top-k: adds ``rank`` by (score desc, corpus id asc) and
+    keeps rank <= k."""
+    w = Window.partitionBy(query_id).orderBy(F.desc(score_col), F.asc(corpus_id))
+    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+
+
+def _score_topk(scored: DataFrame, query_id: str, corpus_id: str, k: int) -> DataFrame:
+    """``_topk`` on ``score``, as (query_id, corpus_id, score rounded to
+    6 places, rank)."""
+    return _topk(scored, query_id, corpus_id, "score", k).select(
+        query_id, corpus_id, F.round("score", 6).alias("score"), "rank"
+    )
+
+
+def _cosine_scored(
+    queries: DataFrame,
+    corpus: DataFrame,
+    query_id: str,
+    corpus_id: str,
+    query_vec: str,
+    corpus_vec: str,
+    on: str | None = None,
+) -> DataFrame:
+    """(query_id, corpus_id, score): exact cosine per pair. Each side's
+    l2_norm is a deterministic per-row fold, so computing it once per
+    side (not once per pair) is bit-identical and 3x less array work.
+    ``on=None`` crosses the broadcast query side with one corpus scan;
+    otherwise the sides equi-join on ``on`` (the IVF probe join)."""
+    q = queries.withColumn("__qn", l2_norm(F.col(query_vec)))
+    c = corpus.withColumn("__cn", l2_norm(F.col(corpus_vec)))
+    pairs = F.broadcast(q).crossJoin(c) if on is None else q.join(c, on=on)
+    score = cosine_from_norms(
+        dot_product(F.col(query_vec), F.col(corpus_vec)), F.col("__qn"), F.col("__cn")
+    )
+    return pairs.select(F.col(query_id), F.col(corpus_id), score.alias("score"))
 
 
 def brute_force_topk(
@@ -39,34 +80,13 @@ def brute_force_topk(
     query_vec: str = "query_vec",
     corpus_vec: str = "embedding",
     k: int = 10,
-    metric: str = "cosine",
 ) -> DataFrame:
-    """Exact top-k per query: broadcast(queries) × corpus → score →
-    window top-k with deterministic (score desc, corpus_id asc) order.
-    Returns (query_id, vec_id, score, rank)."""
-    if metric == "cosine":
-        # Hoist the norms out of the N×M join: each side's l2_norm is a
-        # deterministic per-row fold, so computing it once per side (not
-        # once per pair) is bit-identical and 3x less array work.
-        q = queries.withColumn("__qn", l2_norm(F.col(query_vec)))
-        c = corpus.withColumn("__cn", l2_norm(F.col(corpus_vec)))
-        score = cosine_from_norms(
-            dot_product(F.col(query_vec), F.col(corpus_vec)), F.col("__qn"), F.col("__cn")
-        )
-    else:
-        q, c = queries, corpus
-        score = _score(metric, F.col(query_vec), F.col(corpus_vec))
-    scored = F.broadcast(q).crossJoin(c).select(
-        F.col(query_id),
-        F.col(corpus_id),
-        score.alias("score"),
-    )
-    w = Window.partitionBy(query_id).orderBy(F.desc("score"), F.asc(corpus_id))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id, corpus_id, F.round("score", 6).alias("score"), "rank")
-    )
+    """Exact top-k cosine per query: broadcast(queries) × one corpus
+    scan → hoisted-norm cosine → per-query top-k with deterministic
+    (score desc, corpus_id asc) order. Returns (query_id, vec_id, score,
+    rank)."""
+    scored = _cosine_scored(queries, corpus, query_id, corpus_id, query_vec, corpus_vec)
+    return _score_topk(scored, query_id, corpus_id, k)
 
 
 def hard_negative_topk(
@@ -79,39 +99,21 @@ def hard_negative_topk(
     k: int = 5,
     dup_threshold: float = 0.95,
 ) -> DataFrame:
-    """Hard-negative mining for contrastive/embedding training (round-7
-    ⊕): per query, the k MOST similar corpus vectors that are NOT
-    near-duplicates — cosine strictly below ``dup_threshold``, self
-    excluded. The classic DPR/contrastive recipe: random negatives are
-    too easy; near-duplicates are false negatives; the band just under
-    the dup screen is where the training signal lives.
+    """Hard-negative mining for contrastive/embedding training: per
+    query, the k MOST similar corpus vectors that are NOT near-duplicates
+    — cosine strictly below ``dup_threshold``, self excluded. The classic
+    DPR/contrastive recipe: random negatives are too easy;
+    near-duplicates are false negatives; the band just under the dup
+    screen is where the training signal lives.
 
-    Same scale shape as :func:`brute_force_topk` (broadcast queries ×
-    one corpus scan, hoisted norms, deterministic (score desc, id asc)
-    window top-k); swap the first stage for :func:`ivf_topk`'s probe
-    join at corpus scale. Returns (query_id, corpus_id, score, rank).
+    :func:`brute_force_topk` plus this filter; swap the cross join for
+    :func:`ivf_topk`'s probe join at corpus scale. Returns (query_id,
+    corpus_id, score, rank).
     """
-    q = queries.withColumn("__qn", l2_norm(F.col(query_vec)))
-    c = corpus.withColumn("__cn", l2_norm(F.col(corpus_vec)))
-    score = cosine_from_norms(
-        dot_product(F.col(query_vec), F.col(corpus_vec)),
-        F.col("__qn"),
-        F.col("__cn"),
-    )
-    scored = (
-        F.broadcast(q)
-        .crossJoin(c)
-        .select(F.col(query_id), F.col(corpus_id), score.alias("score"))
-        .filter(
-            (F.col("score") < dup_threshold) & (F.col(query_id) != F.col(corpus_id))
-        )
-    )
-    w = Window.partitionBy(query_id).orderBy(F.desc("score"), F.asc(corpus_id))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id, corpus_id, F.round("score", 6).alias("score"), "rank")
-    )
+    scored = _cosine_scored(
+        queries, corpus, query_id, corpus_id, query_vec, corpus_vec
+    ).filter((F.col("score") < dup_threshold) & (F.col(query_id) != F.col(corpus_id)))
+    return _score_topk(scored, query_id, corpus_id, k)
 
 
 def assign_centroids(
@@ -124,8 +126,8 @@ def assign_centroids(
 ) -> DataFrame:
     """Assign each corpus vector to its nearest centroid (argmax cosine).
 
-    Broadcast nested-loop over the (small) centroid table + window
-    rank=1 — a one-time index build, amortized over all queries.
+    Broadcast nested-loop over the (small) centroid table + top-1 per
+    vector — a one-time index build, amortized over all queries.
     """
     scored = corpus.crossJoin(F.broadcast(centroids)).select(
         F.col(corpus_id),
@@ -133,11 +135,8 @@ def assign_centroids(
         F.col(centroid_id),
         cosine_similarity(F.col(corpus_vec), F.col(centroid_vec)).alias("c_score"),
     )
-    w = Window.partitionBy(corpus_id).orderBy(F.desc("c_score"), F.asc(centroid_id))
-    return (
-        scored.withColumn("__r", F.row_number().over(w))
-        .filter(F.col("__r") == 1)
-        .select(corpus_id, corpus_vec, centroid_id)
+    return _topk(scored, corpus_id, centroid_id, "c_score", 1).select(
+        corpus_id, corpus_vec, centroid_id
     )
 
 
@@ -174,6 +173,28 @@ def sample_centroids(
     )
 
 
+def _probes(
+    queries: DataFrame,
+    centroids: DataFrame,
+    query_id: str,
+    query_vec: str,
+    nprobe: int,
+    *carry: str | F.Column,
+) -> DataFrame:
+    """Route: each query's ``nprobe`` nearest centroids by cosine, as
+    (query_id, *carry, centroid_id). ``carry`` names or computes what
+    the scorer needs from the query side; it is evaluated on the probe
+    rows only (nprobe per query), never per routed corpus row."""
+    scored = (
+        F.broadcast(queries)
+        .crossJoin(F.broadcast(centroids))
+        .withColumn("c_score", cosine_similarity(F.col(query_vec), F.col("centroid_vec")))
+    )
+    return _topk(scored, query_id, "centroid_id", "c_score", nprobe).select(
+        query_id, *carry, "centroid_id"
+    )
+
+
 def ivf_topk(
     queries: DataFrame,
     corpus_indexed: DataFrame,
@@ -189,33 +210,14 @@ def ivf_topk(
 
     corpus_indexed = output of ``assign_centroids``. The query→centroid
     scoring is tiny (|Q|×|C|); the heavy step is an equi-join on
-    centroid_id that touches ~nprobe/num_centroids of the corpus.
+    centroid_id that touches ~nprobe/num_centroids of the corpus, scored
+    by exact cosine.
     """
-    q_probe = F.broadcast(queries).crossJoin(F.broadcast(centroids)).select(
-        F.col(query_id),
-        F.col(query_vec),
-        F.col("centroid_id"),
-        cosine_similarity(F.col(query_vec), F.col("centroid_vec")).alias("c_score"),
+    probes = _probes(queries, centroids, query_id, query_vec, nprobe, query_vec)
+    scored = _cosine_scored(
+        probes, corpus_indexed, query_id, corpus_id, query_vec, corpus_vec, on="centroid_id"
     )
-    wq = Window.partitionBy(query_id).orderBy(F.desc("c_score"), F.asc("centroid_id"))
-    probes = q_probe.withColumn("__r", F.row_number().over(wq)).filter(F.col("__r") <= nprobe).select(
-        query_id, query_vec, "centroid_id"
-    )
-    scored = probes.withColumn("__qn", l2_norm(F.col(query_vec))).join(
-        corpus_indexed.withColumn("__cn", l2_norm(F.col(corpus_vec))), on="centroid_id"
-    ).select(
-        F.col(query_id),
-        F.col(corpus_id),
-        cosine_from_norms(
-            dot_product(F.col(query_vec), F.col(corpus_vec)), F.col("__qn"), F.col("__cn")
-        ).alias("score"),
-    )
-    w = Window.partitionBy(query_id).orderBy(F.desc("score"), F.asc(corpus_id))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id, corpus_id, F.round("score", 6).alias("score"), "rank")
-    )
+    return _score_topk(scored, query_id, corpus_id, k)
 
 
 def kmeans_refine(
@@ -303,26 +305,32 @@ def hashing_embed(
     return out
 
 
+def _book_lit(book: list[list[float]]) -> F.Column:
+    """k × d_sub literal of one subspace codebook (codebooks are tiny by
+    design)."""
+    return F.array(*[F.array(*[F.lit(float(x)) for x in c]) for c in book])
+
+
 def _codebooks_lit(codebooks: list[list[list[float]]]) -> F.Column:
-    """m × k × d_sub nested literal (codebooks are tiny by design)."""
-    return F.array(
-        *[
-            F.array(*[F.array(*[F.lit(float(x)) for x in c]) for c in book])
-            for book in codebooks
-        ]
+    """m × k × d_sub nested literal of all subspace codebooks."""
+    return F.array(*[_book_lit(book) for book in codebooks])
+
+
+def _per_centroid(v: F.Column, book: F.Column, op) -> F.Column:
+    """Σ_i op(v_i, c_i) against every centroid ``c`` in ``book``."""
+    return F.transform(
+        book,
+        lambda c: F.aggregate(
+            F.zip_with(v, c, op),
+            F.lit(0.0),
+            lambda acc, x: acc + x,
+        ),
     )
 
 
 def _sq_dists(v: F.Column, book: F.Column) -> F.Column:
     """Squared L2 distance from ``v`` to every centroid in ``book``."""
-    return F.transform(
-        book,
-        lambda c: F.aggregate(
-            F.zip_with(v, c, lambda a, b: (a - b) * (a - b)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ),
-    )
+    return _per_centroid(v, book, lambda a, b: (a - b) * (a - b))
 
 
 def _argmin(arr: F.Column) -> F.Column:
@@ -339,6 +347,56 @@ def _argmin(arr: F.Column) -> F.Column:
         )[0]
         - 1
     ).cast("int")
+
+
+def _adc_lut(query_vec: str, codebooks: list[list[list[float]]]) -> F.Column:
+    """Per-query ADC lookup table: dot(query subvector, centroid) for
+    every (subspace, centroid) — m*k floats."""
+    d = len(codebooks[0][0])
+    qv = F.col(query_vec).cast("array<double>")
+    return F.array(
+        *[
+            _per_centroid(F.slice(qv, s * d + 1, d), _book_lit(book), lambda a, b: a * b)
+            for s, book in enumerate(codebooks)
+        ]
+    )
+
+
+def _adc_score() -> F.Column:
+    """ADC score of a (``codes``, ``__lut``) row: m table lookups summed,
+    never a d-dimensional dot product."""
+    return F.aggregate(
+        F.zip_with(
+            F.col("codes"), F.col("__lut"), lambda code, l: F.element_at(l, code + 1)
+        ),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+
+
+def _exact_rerank(
+    cands: DataFrame,
+    queries: DataFrame,
+    raw: DataFrame,
+    query_id: str,
+    corpus_id: str,
+    query_vec: str,
+    corpus_vec: str,
+    k: int,
+) -> DataFrame:
+    """Exact-cosine top-k over per-query candidates: the raw query and
+    corpus vectors are fetched for the candidate handful only."""
+    exact = (
+        cands.select(query_id, corpus_id)
+        .join(queries.select(query_id, query_vec), query_id)
+        .join(raw.select(corpus_id, corpus_vec), corpus_id)
+        .select(
+            query_id,
+            corpus_id,
+            cosine_similarity(F.col(query_vec), F.col(corpus_vec)).alias("score"),
+        )
+    )
+    return _score_topk(exact, query_id, corpus_id, k)
 
 
 def pq_train(
@@ -442,23 +500,12 @@ def pq_encode(
     subspace's code is an argmin against the broadcast codebook literal
     computed inline. This is the table you persist instead of the raw
     vectors: m ints per row vs dim floats."""
-    m = len(codebooks)
     d = len(codebooks[0][0])
     vec = F.col(corpus_vec).cast("array<double>")
     codes = F.array(
         *[
-            _argmin(
-                _sq_dists(
-                    F.slice(vec, s * d + 1, d),
-                    F.array(
-                        *[
-                            F.array(*[F.lit(float(x)) for x in c])
-                            for c in codebooks[s]
-                        ]
-                    ),
-                )
-            )
-            for s in range(m)
+            _argmin(_sq_dists(F.slice(vec, s * d + 1, d), _book_lit(book)))
+            for s, book in enumerate(codebooks)
         ]
     )
     return corpus.select(F.col(corpus_id), codes.alias("codes"))
@@ -494,65 +541,15 @@ def pq_topk(
     handful. Quantization distortion then costs recall only when a true
     neighbor falls out of the candidate set entirely, not rank order.
     """
-    m = len(codebooks)
-    d = len(codebooks[0][0])
-    qv = F.col(query_vec).cast("array<double>")
-
-    def _sub_lut(s: int) -> F.Column:
-        # NB: capture s via closure, NOT a lambda default arg — a
-        # 2-parameter lambda is treated by transform() as
-        # (element, index) and the "default" gets the array index.
-        qs = F.slice(qv, s * d + 1, d)
-        return F.transform(
-            F.array(
-                *[F.array(*[F.lit(float(x)) for x in c]) for c in codebooks[s]]
-            ),
-            lambda c: F.aggregate(
-                F.zip_with(qs, c, lambda a, b: a * b),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ),
-        )
-
-    lut = F.array(*[_sub_lut(s) for s in range(m)])
-    q = queries.select(F.col(query_id), lut.alias("__lut"))
-    score = F.aggregate(
-        F.zip_with(
-            F.col("codes"),
-            F.col("__lut"),
-            lambda code, l: F.element_at(l, code + 1),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    q = queries.select(F.col(query_id), _adc_lut(query_vec, codebooks).alias("__lut"))
     scored = F.broadcast(q).crossJoin(encoded).select(
-        F.col(query_id), F.col(corpus_id), score.alias("score")
-    )
-    w = Window.partitionBy(query_id).orderBy(F.desc("score"), F.asc(corpus_id))
-    n_cand = k * rerank_factor if rerank_corpus is not None else k
-    cands = (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= n_cand)
-        .select(query_id, corpus_id, F.round("score", 6).alias("score"), "rank")
+        F.col(query_id), F.col(corpus_id), _adc_score().alias("score")
     )
     if rerank_corpus is None:
-        return cands
-    from ..functions.arrays import cosine_similarity
-
-    exact = (
-        cands.select(query_id, corpus_id)
-        .join(queries.select(query_id, query_vec), query_id)
-        .join(rerank_corpus.select(corpus_id, corpus_vec), corpus_id)
-        .select(
-            query_id,
-            corpus_id,
-            cosine_similarity(F.col(query_vec), F.col(corpus_vec)).alias("score"),
-        )
-    )
-    return (
-        exact.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id, corpus_id, F.round("score", 6).alias("score"), "rank")
+        return _score_topk(scored, query_id, corpus_id, k)
+    cands = _topk(scored, query_id, corpus_id, "score", k * rerank_factor)
+    return _exact_rerank(
+        cands, queries, rerank_corpus, query_id, corpus_id, query_vec, corpus_vec, k
     )
 
 
@@ -581,76 +578,23 @@ def ivfpq_topk(
     is a partition-pruned scan of code columns only; raw vectors are
     fetched per candidate for the re-rank.
     """
-    q_probe = F.broadcast(queries).crossJoin(F.broadcast(centroids)).select(
-        F.col(query_id),
-        F.col(query_vec),
-        F.col("centroid_id"),
-        cosine_similarity(F.col(query_vec), F.col("centroid_vec")).alias("c_score"),
-    )
-    wq = Window.partitionBy(query_id).orderBy(F.desc("c_score"), F.asc("centroid_id"))
-    m = len(codebooks)
-    d = len(codebooks[0][0])
-    qv = F.col(query_vec).cast("array<double>")
-
-    def _sub_lut(s: int) -> F.Column:
-        qs = F.slice(qv, s * d + 1, d)
-        return F.transform(
-            F.array(
-                *[F.array(*[F.lit(float(x)) for x in c]) for c in codebooks[s]]
-            ),
-            lambda c: F.aggregate(
-                F.zip_with(qs, c, lambda a, b: a * b),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ),
-        )
-
     # The per-query ADC lookup table is MATERIALIZED on the probe rows
     # (nprobe per query) and carried through the centroid join — routed
     # corpus rows then pay only the m element_at lookups. Evaluating the
     # LUT expression in the scored select instead would recompute all
     # m*k centroid dot products (O(k*d)) for EVERY touched corpus row,
-    # defeating the ADC cost model (pq_topk projects its LUT in `q` for
-    # the same reason).
-    lut = F.array(*[_sub_lut(s) for s in range(m)])
-    probes = (
-        q_probe.withColumn("__r", F.row_number().over(wq))
-        .filter(F.col("__r") <= nprobe)
-        .select(query_id, lut.alias("__lut"), "centroid_id")
-    )
+    # defeating the ADC cost model (pq_topk projects its LUT on the
+    # query side for the same reason).
+    lut = _adc_lut(query_vec, codebooks).alias("__lut")
+    probes = _probes(queries, centroids, query_id, query_vec, nprobe, lut)
     routed = probes.join(
         corpus_indexed.select(corpus_id, "centroid_id").join(encoded, corpus_id),
         on="centroid_id",
-    ).select(query_id, "__lut", corpus_id, "codes")
-    adc = F.aggregate(
-        F.zip_with(
-            F.col("codes"), F.col("__lut"), lambda code, l: F.element_at(l, code + 1)
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
     )
-    w = Window.partitionBy(query_id).orderBy(F.desc("score"), F.asc(corpus_id))
-    cands = (
-        routed.select(F.col(query_id), F.col(corpus_id), adc.alias("score"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k * rerank_factor)
-        .select(query_id, corpus_id)
-    )
-    exact = (
-        cands.join(queries.select(query_id, query_vec), query_id)
-        .join(
-            corpus_indexed.select(corpus_id, corpus_vec), corpus_id
-        )
-        .select(
-            query_id,
-            corpus_id,
-            cosine_similarity(F.col(query_vec), F.col(corpus_vec)).alias("score"),
-        )
-    )
-    return (
-        exact.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id, corpus_id, F.round("score", 6).alias("score"), "rank")
+    scored = routed.select(F.col(query_id), F.col(corpus_id), _adc_score().alias("score"))
+    cands = _topk(scored, query_id, corpus_id, "score", k * rerank_factor)
+    return _exact_rerank(
+        cands, queries, corpus_indexed, query_id, corpus_id, query_vec, corpus_vec, k
     )
 
 
@@ -663,9 +607,9 @@ def bm25_topk(
     k1: float = 1.2,
     b: float = 0.75,
 ) -> DataFrame:
-    """Okapi BM25 top-k document retrieval for a fixed query term set
-    (round-6 ⊕): the lexical scorer of the retrieval stack, Lucene idf
-    variant (ln((N-df+0.5)/(df+0.5)+1), always positive).
+    """Okapi BM25 top-k document retrieval for a fixed query term set:
+    the lexical scorer of the retrieval stack, Lucene idf variant
+    (ln((N-df+0.5)/(df+0.5)+1), always positive).
 
     Scale shape: term frequencies are ROW-LOCAL (``term_counts``) and
     filtered to the query's terms INSIDE the row, so only
@@ -731,7 +675,7 @@ def rrf_fuse(
     k: int = 10,
     c: int = 60,
 ) -> DataFrame:
-    """Reciprocal-rank fusion (round-6 ⊕) — the standard hybrid-search
+    """Reciprocal-rank fusion — the standard hybrid-search
     combiner (Cormack/Clarke/Buettcher SIGIR'09): fused(d) =
     Σ_lists 1/(c + rank_d), summing only over lists that contain d.
 
@@ -859,6 +803,37 @@ def int8_quantize(
     )
 
 
+def _qcos_topk(pairs: DataFrame, query_id: str, corpus_id: str, k: int) -> DataFrame:
+    """Quantized cosine int_dot / sqrt(qnorm2_q * qnorm2_c) over
+    (``__qq``, ``__qn2``) × (``__cq``, ``__cn2``) pairs, self excluded,
+    then the per-query top-k as (query_id, corpus_id, int_dot, qcos,
+    rank). int_dot and the norms stay in int64 (|q| <= 127, d <= ~500k
+    dims before overflow); the final sqrt/division are
+    IEEE-correctly-rounded single ops, hence cross-engine deterministic,
+    unlike float dot products."""
+    int_dot = F.aggregate(
+        F.zip_with(F.col("__qq"), F.col("__cq"), lambda a, b: a * b),
+        F.lit(0).cast("long"),
+        lambda acc, v: acc + v,
+    )
+    scored = (
+        pairs.filter(F.col(query_id) != F.col(corpus_id))
+        .withColumn("int_dot", int_dot)
+        .withColumn(
+            "qcos",
+            F.col("int_dot").cast("double")
+            / F.sqrt((F.col("__qn2") * F.col("__cn2")).cast("double")),
+        )
+    )
+    return _topk(scored, query_id, corpus_id, "qcos", k).select(
+        query_id,
+        corpus_id,
+        "int_dot",
+        F.round("qcos", 6).alias("qcos"),
+        F.col("rank").cast("int").alias("rank"),
+    )
+
+
 def int8_topk(
     queries: DataFrame,
     corpus: DataFrame,
@@ -877,43 +852,15 @@ def int8_topk(
     Scale shape: identical to brute_force_topk (broadcast query side x one
     corpus scan, WindowGroupLimit top-k) but the corpus column it scans is
     4x smaller and the inner loop is integer multiply-add — the practical
-    first rung of memory-bound ANN before IVF/PQ. int_dot and the norms
-    stay in int64 (|q| <= 127, d <= ~500k dims before overflow); the final
-    sqrt/division are IEEE-correctly-rounded single ops, hence
-    cross-engine deterministic, unlike float dot products.
+    first rung of memory-bound ANN before IVF/PQ.
     """
-    from pyspark.sql import Window
-
     q = int8_quantize(queries, query_vec, out_q="__qq", out_norm2="__qn2")
     c = int8_quantize(corpus, corpus_vec, out_q="__cq", out_norm2="__cn2")
-    int_dot = F.aggregate(
-        F.zip_with(F.col("__qq"), F.col("__cq"), lambda a, b: a * b),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
-    scored = (
-        c.crossJoin(F.broadcast(q.select(query_id, "__qq", "__qn2")))
-        .filter(F.col(query_id) != F.col(corpus_id))
-        .withColumn("int_dot", int_dot)
-        .withColumn(
-            "qcos",
-            F.col("int_dot").cast("double")
-            / F.sqrt((F.col("__qn2") * F.col("__cn2")).cast("double")),
-        )
-    )
-    w = Window.partitionBy(query_id).orderBy(
-        F.col("qcos").desc(), F.col(corpus_id).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select(
-            query_id,
-            corpus_id,
-            "int_dot",
-            F.round("qcos", 6).alias("qcos"),
-            "rank",
-        )
+    return _qcos_topk(
+        c.crossJoin(F.broadcast(q.select(query_id, "__qq", "__qn2"))),
+        query_id,
+        corpus_id,
+        k,
     )
 
 
@@ -939,53 +886,8 @@ def ivf_int8_topk(
     the candidate set is index-specific. Returns
     (query_id, corpus_id, int_dot, qcos, rank).
     """
-    from pyspark.sql import Window
-
-    c_idx = assign_centroids(corpus, centroids)
+    c_idx = assign_centroids(corpus, centroids, corpus_id=corpus_id, corpus_vec=corpus_vec)
     cq = int8_quantize(c_idx, corpus_vec, out_q="__cq", out_norm2="__cn2")
     qq = int8_quantize(queries, query_vec, out_q="__qq", out_norm2="__qn2")
-
-    wq = Window.partitionBy(query_id).orderBy(
-        F.desc("c_score"), F.asc("centroid_id")
-    )
-    probes = (
-        F.broadcast(qq)
-        .crossJoin(F.broadcast(centroids))
-        .select(
-            query_id,
-            "__qq",
-            "__qn2",
-            "centroid_id",
-            cosine_similarity(F.col(query_vec), F.col("centroid_vec")).alias(
-                "c_score"
-            ),
-        )
-        .withColumn("__r", F.row_number().over(wq))
-        .filter(F.col("__r") <= nprobe)
-        .select(query_id, "__qq", "__qn2", "centroid_id")
-    )
-    int_dot = F.aggregate(
-        F.zip_with(F.col("__qq"), F.col("__cq"), lambda a, b: a * b),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
-    scored = (
-        cq.join(probes, "centroid_id")
-        .filter(F.col(query_id) != F.col(corpus_id))
-        .withColumn("int_dot", int_dot)
-        .withColumn(
-            "qcos",
-            F.col("int_dot").cast("double")
-            / F.sqrt((F.col("__qn2") * F.col("__cn2")).cast("double")),
-        )
-    )
-    w = Window.partitionBy(query_id).orderBy(
-        F.col("qcos").desc(), F.col(corpus_id).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select(
-            query_id, corpus_id, "int_dot", F.round("qcos", 6).alias("qcos"), "rank"
-        )
-    )
+    probes = _probes(qq, centroids, query_id, query_vec, nprobe, "__qq", "__qn2")
+    return _qcos_topk(cq.join(probes, "centroid_id"), query_id, corpus_id, k)

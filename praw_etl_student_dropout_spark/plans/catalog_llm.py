@@ -21,9 +21,10 @@ recall), see tests/test_dedup.py and tests/test_similarity.py.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.arrays import cosine_similarity
 from ..operators.dedup import (
     contamination_pairs,
     embedding_dup_pairs,
@@ -53,6 +54,32 @@ SQL_COSINE = (
     "sqrt(list_dot_product({a}::DOUBLE[], {a}::DOUBLE[])) * "
     "sqrt(list_dot_product({b}::DOUBLE[], {b}::DOUBLE[])), 1e-12)"
 )
+
+# Oracle of the U7 contract grades: per query, the exact cosine max to a
+# non-self corpus row — the value anchor both engines compute
+# bit-for-bit — beside the literal columns the contracts must equal.
+SQL_EXACT_MAX_NONSELF = """
+    SELECT q.vec_id AS query_id,
+{head}           round(max(CASE WHEN c.vec_id != q.vec_id THEN
+             {cos} END), 6)
+             AS exact_max_nonself,
+{flags}
+    FROM (SELECT * FROM embeddings WHERE vec_id < {n}) q
+    CROSS JOIN embeddings c
+    GROUP BY q.vec_id
+    """
+
+
+def _sql_exact_max_nonself(n: int, *flags: str, head: bool = False) -> str:
+    """SQL_EXACT_MAX_NONSELF over the vectors with vec_id < ``n`` as
+    queries, each of ``flags`` a TRUE column; ``head`` adds the
+    n_results = 5 column of the PQ entries."""
+    return SQL_EXACT_MAX_NONSELF.format(
+        n=n,
+        head="           CAST(5 AS BIGINT) AS n_results,\n" if head else "",
+        cos=SQL_COSINE.format(a="q.embedding", b="c.embedding"),
+        flags=",\n".join(f"           TRUE AS {f}" for f in flags),
+    )
 
 
 @register(
@@ -665,6 +692,152 @@ def d3_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _query_set(e: DataFrame, n: int) -> DataFrame:
+    """The vectors with vec_id < ``n`` as the (query_id, query_vec) query
+    set of the U7 entries."""
+    return e.filter(F.col("vec_id") < n).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
+    )
+
+
+def _unit_embeddings(emb: DataFrame) -> DataFrame:
+    """(vec_id, embedding / ||embedding||) as double arrays — the PQ
+    entries' training and scan corpus, persisted through the cache
+    registry."""
+    from ..functions.arrays import l2_norm
+    from .cache_registry import track
+
+    vec = F.col("embedding").cast("array<double>")
+    return track(
+        emb.select("vec_id", F.transform(vec, lambda x: x / l2_norm(vec)).alias("embedding"))
+    )
+
+
+def _probe_mirror(queries: DataFrame, centroids: DataFrame, nprobe: int) -> DataFrame:
+    """(query_id, centroid_id, __probed) for each query's ``nprobe``
+    nearest centroids. Re-derived here, not through operators/similarity,
+    so the routing check never compares the operator with itself."""
+    wq = Window.partitionBy("query_id").orderBy(
+        F.desc("c_score"), F.asc("centroid_id")
+    )
+    return (
+        F.broadcast(queries)
+        .crossJoin(F.broadcast(centroids))
+        .select(
+            "query_id",
+            "centroid_id",
+            cosine_similarity(F.col("query_vec"), F.col("centroid_vec")).alias(
+                "c_score"
+            ),
+        )
+        .withColumn("__r", F.row_number().over(wq))
+        .filter(F.col("__r") <= nprobe)
+        .select("query_id", "centroid_id", F.lit(True).alias("__probed"))
+    )
+
+
+def _routed_ok(
+    res: DataFrame, indexed: DataFrame, queries: DataFrame, centroids: DataFrame, nprobe: int
+) -> DataFrame:
+    """Per query, routed_from_probed_lists: every returned row's assigned
+    centroid is among the query's ``nprobe`` nearest lists."""
+    return (
+        res.join(indexed.select("vec_id", "centroid_id"), "vec_id")
+        .join(_probe_mirror(queries, centroids, nprobe), ["query_id", "centroid_id"], "left")
+        .groupBy("query_id")
+        .agg(
+            F.min(F.coalesce("__probed", F.lit(False))).alias(
+                "routed_from_probed_lists"
+            )
+        )
+    )
+
+
+def _raw_cosine(e: DataFrame, queries: DataFrame) -> DataFrame:
+    """(query_id, vec_id, __cos): exact cosine of every query against
+    every raw corpus vector."""
+    return (
+        F.broadcast(queries)
+        .crossJoin(e.select("vec_id", "embedding"))
+        .select(
+            "query_id",
+            "vec_id",
+            cosine_similarity(F.col("query_vec"), F.col("embedding")).alias("__cos"),
+        )
+    )
+
+
+def _nonself_stats(pairs: DataFrame, score: str, name: str) -> DataFrame:
+    """Per query: ``name``, the max ``score`` to a non-self row rounded
+    to 6 places (the value anchor the oracle recomputes), and __max_all,
+    the corpus max that bounds the returned top-1."""
+    return pairs.groupBy("query_id").agg(
+        F.round(
+            F.max(F.when(F.col("vec_id") != F.col("query_id"), F.col(score))), 6
+        ).alias(name),
+        F.max(score).alias("__max_all"),
+    )
+
+
+def _top1_count(res: DataFrame, score: str, n: str) -> DataFrame:
+    """Per query: the result count ``n`` and the rank-1 ``score``
+    (__top1)."""
+    return res.groupBy("query_id").agg(
+        F.count(F.lit(1)).alias(n), F.min_by(score, "rank").alias("__top1")
+    )
+
+
+def _top1_bounded() -> F.Column:
+    """No returned score exceeds the exact corpus max."""
+    return (F.col("__top1") <= F.col("__max_all") + F.lit(1e-6)).alias("top1_bounded")
+
+
+def _ivf_contract(
+    e: DataFrame, centroids: DataFrame, indexed: DataFrame, complete: DataFrame | None = None
+) -> DataFrame:
+    """The IVF contract grade of ``ivf_topk(k=10, nprobe=4)`` over the
+    first 8 vectors as queries, one row per query: exact_max_nonself,
+    routed_from_probed_lists, score_is_exact_cosine (each returned score
+    equals the cosine recomputed on the raw vectors), top1_bounded,
+    ``complete``'s index_complete when given, and nonempty."""
+    queries = _query_set(e, 8)
+    res = ivf_topk(queries, indexed, centroids, k=10, nprobe=4)
+    score_ok = (
+        res.join(queries, "query_id")
+        .join(e.select("vec_id", "embedding"), "vec_id")
+        .select(
+            "query_id",
+            (
+                F.round(
+                    cosine_similarity(F.col("query_vec"), F.col("embedding")), 6
+                )
+                == F.col("score")
+            ).alias("__ok"),
+        )
+        .groupBy("query_id")
+        .agg(F.min("__ok").alias("score_is_exact_cosine"))
+    )
+    graded = (
+        _top1_count(res, "score", "__n")
+        .join(_nonself_stats(_raw_cosine(e, queries), "__cos", "exact_max_nonself"), "query_id")
+        .join(_routed_ok(res, indexed, queries, centroids, nprobe=4), "query_id")
+        .join(score_ok, "query_id")
+    )
+    extra = []
+    if complete is not None:
+        graded = graded.crossJoin(F.broadcast(complete))
+        extra = ["index_complete"]
+    return graded.select(
+        "query_id",
+        "exact_max_nonself",
+        "routed_from_probed_lists",
+        "score_is_exact_cosine",
+        _top1_bounded(),
+        *extra,
+        (F.col("__n") >= 1).alias("nonempty"),
+    )
+
+
 @register(
     "u7_knn_bruteforce",
     "U7",
@@ -685,13 +858,7 @@ def d3_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def u7_knn_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _t(spark, sf_dir, "embeddings")["embeddings"]
-    queries = e.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    return brute_force_topk(
-        queries, e, query_id="query_id", corpus_id="vec_id",
-        query_vec="query_vec", corpus_vec="embedding", k=10, metric="cosine",
-    )
+    return brute_force_topk(_query_set(e, 8), e, k=10)
 
 
 @register(
@@ -724,31 +891,19 @@ def llm_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.similarity import hard_negative_topk
 
     e = _t(spark, sf_dir, "embeddings")["embeddings"]
-    queries = e.filter(F.col("vec_id") < 4).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    return hard_negative_topk(
-        queries, e, query_id="query_id", corpus_id="vec_id", k=5,
-        dup_threshold=0.95,
-    )
+    return hard_negative_topk(_query_set(e, 4), e, k=5, dup_threshold=0.95)
 
 
 @register(
     "u7_knn_ivf",
     "U7",
-    f"""
-    SELECT q.vec_id AS query_id,
-           round(max(CASE WHEN c.vec_id != q.vec_id THEN
-             {SQL_COSINE.format(a='q.embedding', b='c.embedding')} END), 6)
-             AS exact_max_nonself,
-           TRUE AS routed_from_probed_lists,
-           TRUE AS score_is_exact_cosine,
-           TRUE AS top1_bounded,
-           TRUE AS nonempty
-    FROM (SELECT * FROM embeddings WHERE vec_id < 8) q
-    CROSS JOIN embeddings c
-    GROUP BY q.vec_id
-    """,
+    _sql_exact_max_nonself(
+        8,
+        "routed_from_probed_lists",
+        "score_is_exact_cosine",
+        "top1_bounded",
+        "nonempty",
+    ),
     doc="IVF approximate top-k, contract-graded (the u7_ivfpq_topk "
     "pattern, round-8 rows-only whittling): one-time centroid "
     "assignment, queries probe nprobe inverted lists via equi-join on "
@@ -764,118 +919,22 @@ def llm_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     "tests/test_similarity.py.",
 )
 def u7_knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    from ..functions.arrays import cosine_similarity
-
     e = _t(spark, sf_dir, "embeddings")["embeddings"]
     centroids = sample_centroids(e, num_centroids=16)
-    indexed = assign_centroids(e, centroids)
-    queries = e.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    res = ivf_topk(queries, indexed, centroids, k=10, nprobe=4)
-
-    # mirror of ivf_topk's probe selection, for the routing check
-    wq = Window.partitionBy("query_id").orderBy(
-        F.desc("c_score"), F.asc("centroid_id")
-    )
-    probes = (
-        F.broadcast(queries)
-        .crossJoin(F.broadcast(centroids))
-        .select(
-            "query_id",
-            "centroid_id",
-            cosine_similarity(F.col("query_vec"), F.col("centroid_vec")).alias(
-                "c_score"
-            ),
-        )
-        .withColumn("__r", F.row_number().over(wq))
-        .filter(F.col("__r") <= 4)
-        .select("query_id", "centroid_id", F.lit(True).alias("__probed"))
-    )
-    routed_ok = (
-        res.join(indexed.select("vec_id", "centroid_id"), "vec_id")
-        .join(probes, ["query_id", "centroid_id"], "left")
-        .groupBy("query_id")
-        .agg(
-            F.min(F.coalesce("__probed", F.lit(False))).alias(
-                "routed_from_probed_lists"
-            )
-        )
-    )
-    # independent exact-cosine recomputation of every returned score
-    score_ok = (
-        res.join(queries, "query_id")
-        .join(e.select("vec_id", "embedding"), "vec_id")
-        .select(
-            "query_id",
-            (
-                F.round(
-                    cosine_similarity(F.col("query_vec"), F.col("embedding")), 6
-                )
-                == F.col("score")
-            ).alias("__ok"),
-        )
-        .groupBy("query_id")
-        .agg(F.min("__ok").alias("score_is_exact_cosine"))
-    )
-    stats = (
-        F.broadcast(queries)
-        .crossJoin(e.select("vec_id", "embedding"))
-        .select(
-            "query_id",
-            "vec_id",
-            cosine_similarity(F.col("query_vec"), F.col("embedding")).alias("__cos"),
-        )
-        .groupBy("query_id")
-        .agg(
-            F.round(
-                F.max(F.when(F.col("vec_id") != F.col("query_id"), F.col("__cos"))),
-                6,
-            ).alias("exact_max_nonself"),
-            F.max("__cos").alias("__max_all"),
-        )
-    )
-    top1 = res.filter(F.col("rank") == 1).select(
-        "query_id", F.col("score").alias("__top1")
-    )
-    counts = res.groupBy("query_id").agg(F.count(F.lit(1)).alias("__n"))
-    return (
-        counts.join(stats, "query_id")
-        .join(routed_ok, "query_id")
-        .join(score_ok, "query_id")
-        .join(top1, "query_id")
-        .select(
-            "query_id",
-            "exact_max_nonself",
-            "routed_from_probed_lists",
-            "score_is_exact_cosine",
-            (F.col("__top1") <= F.col("__max_all") + F.lit(1e-6)).alias(
-                "top1_bounded"
-            ),
-            (F.col("__n") >= 1).alias("nonempty"),
-        )
-    )
+    return _ivf_contract(e, centroids, assign_centroids(e, centroids))
 
 
 @register(
     "u7_ivf_persisted",
     "U7 ⊕ (persisted IVF index + delta-append routing)",
-    f"""
-    SELECT q.vec_id AS query_id,
-           round(max(CASE WHEN c.vec_id != q.vec_id THEN
-             {SQL_COSINE.format(a='q.embedding', b='c.embedding')} END), 6)
-             AS exact_max_nonself,
-           TRUE AS routed_from_probed_lists,
-           TRUE AS score_is_exact_cosine,
-           TRUE AS top1_bounded,
-           TRUE AS index_complete,
-           TRUE AS nonempty
-    FROM (SELECT * FROM embeddings WHERE vec_id < 8) q
-    CROSS JOIN embeddings c
-    GROUP BY q.vec_id
-    """,
+    _sql_exact_max_nonself(
+        8,
+        "routed_from_probed_lists",
+        "score_is_exact_cosine",
+        "top1_bounded",
+        "index_complete",
+        "nonempty",
+    ),
     doc="The u7_knn_ivf contract on a PERSISTED index (VERDICT r13 "
     "#4): centroids + assignments are a maintained scratch layout "
     "(operators/bucketing.ensure_ivf_index — assignments bucketed by "
@@ -897,11 +956,7 @@ def u7_knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     "a stale or partial layout can never grade green.",
 )
 def u7_ivf_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    from ..functions.arrays import cosine_similarity
     from ..operators.bucketing import IVF_DELTA_MOD, ensure_ivf_index
-    from ..operators.similarity import ivf_topk
 
     cent_t, asg_t = ensure_ivf_index(spark, sf_dir)
     centroids = spark.table(cent_t)
@@ -910,71 +965,6 @@ def u7_ivf_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     # read-time routing of the delta against the PERSISTED centroids —
     # cost ∝ |delta| × k, the corpus is never rescanned
     indexed = spark.table(asg_t).unionByName(assign_centroids(delta, centroids))
-    queries = e.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    res = ivf_topk(queries, indexed, centroids, k=10, nprobe=4)
-
-    # mirror of ivf_topk's probe selection, for the routing check
-    wq = Window.partitionBy("query_id").orderBy(
-        F.desc("c_score"), F.asc("centroid_id")
-    )
-    probes = (
-        F.broadcast(queries)
-        .crossJoin(F.broadcast(centroids))
-        .select(
-            "query_id",
-            "centroid_id",
-            cosine_similarity(F.col("query_vec"), F.col("centroid_vec")).alias(
-                "c_score"
-            ),
-        )
-        .withColumn("__r", F.row_number().over(wq))
-        .filter(F.col("__r") <= 4)
-        .select("query_id", "centroid_id", F.lit(True).alias("__probed"))
-    )
-    routed_ok = (
-        res.join(indexed.select("vec_id", "centroid_id"), "vec_id")
-        .join(probes, ["query_id", "centroid_id"], "left")
-        .groupBy("query_id")
-        .agg(
-            F.min(F.coalesce("__probed", F.lit(False))).alias(
-                "routed_from_probed_lists"
-            )
-        )
-    )
-    score_ok = (
-        res.join(queries, "query_id")
-        .join(e.select("vec_id", "embedding"), "vec_id")
-        .select(
-            "query_id",
-            (
-                F.round(
-                    cosine_similarity(F.col("query_vec"), F.col("embedding")), 6
-                )
-                == F.col("score")
-            ).alias("__ok"),
-        )
-        .groupBy("query_id")
-        .agg(F.min("__ok").alias("score_is_exact_cosine"))
-    )
-    stats = (
-        F.broadcast(queries)
-        .crossJoin(e.select("vec_id", "embedding"))
-        .select(
-            "query_id",
-            "vec_id",
-            cosine_similarity(F.col("query_vec"), F.col("embedding")).alias("__cos"),
-        )
-        .groupBy("query_id")
-        .agg(
-            F.round(
-                F.max(F.when(F.col("vec_id") != F.col("query_id"), F.col("__cos"))),
-                6,
-            ).alias("exact_max_nonself"),
-            F.max("__cos").alias("__max_all"),
-        )
-    )
     # layout-staleness tripwire: base ∪ delta must cover the corpus
     # exactly once — a swept/partial/over-appended index fails here
     complete = (
@@ -990,46 +980,19 @@ def u7_ivf_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("index_complete")
         )
     )
-    top1 = res.filter(F.col("rank") == 1).select(
-        "query_id", F.col("score").alias("__top1")
-    )
-    counts = res.groupBy("query_id").agg(F.count(F.lit(1)).alias("__n"))
-    return (
-        counts.join(stats, "query_id")
-        .join(routed_ok, "query_id")
-        .join(score_ok, "query_id")
-        .join(top1, "query_id")
-        .crossJoin(F.broadcast(complete))
-        .select(
-            "query_id",
-            "exact_max_nonself",
-            "routed_from_probed_lists",
-            "score_is_exact_cosine",
-            (F.col("__top1") <= F.col("__max_all") + F.lit(1e-6)).alias(
-                "top1_bounded"
-            ),
-            "index_complete",
-            (F.col("__n") >= 1).alias("nonempty"),
-        )
-    )
+    return _ivf_contract(e, centroids, indexed, complete)
 
 
 @register(
     "u7_kmeans_ivf",
     "U7+iterative",
-    f"""
-    SELECT q.vec_id AS query_id,
-           round(max(CASE WHEN c.vec_id != q.vec_id THEN
-             {SQL_COSINE.format(a='q.embedding', b='c.embedding')} END), 6)
-             AS exact_max_nonself,
-           TRUE AS routed_from_probed_lists,
-           TRUE AS score_is_exact_cosine,
-           TRUE AS top1_bounded,
-           TRUE AS nonempty
-    FROM (SELECT * FROM embeddings WHERE vec_id < 8) q
-    CROSS JOIN embeddings c
-    GROUP BY q.vec_id
-    """,
+    _sql_exact_max_nonself(
+        8,
+        "routed_from_probed_lists",
+        "score_is_exact_cosine",
+        "top1_bounded",
+        "nonempty",
+    ),
     doc="IVF with Lloyd-refined centroids (3 k-means iterations: "
     "broadcast assign + posexplode/partial-agg mean update, lineage cut "
     "per round), then the same nprobe query path — contract-graded like "
@@ -1042,100 +1005,13 @@ def u7_ivf_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     "stays pinned in tests/test_similarity.py.",
 )
 def u7_kmeans_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    from ..functions.arrays import cosine_similarity
     from ..operators.similarity import kmeans_refine
 
     e = _t(spark, sf_dir, "embeddings")["embeddings"]
     centroids = kmeans_refine(
         e, sample_centroids(e, num_centroids=16), iterations=3
     ).localCheckpoint(eager=True)  # one training run feeds index AND probe mirror
-    indexed = assign_centroids(e, centroids)
-    queries = e.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    res = ivf_topk(queries, indexed, centroids, k=10, nprobe=4)
-
-    wq = Window.partitionBy("query_id").orderBy(
-        F.desc("c_score"), F.asc("centroid_id")
-    )
-    probes = (
-        F.broadcast(queries)
-        .crossJoin(F.broadcast(centroids))
-        .select(
-            "query_id",
-            "centroid_id",
-            cosine_similarity(F.col("query_vec"), F.col("centroid_vec")).alias(
-                "c_score"
-            ),
-        )
-        .withColumn("__r", F.row_number().over(wq))
-        .filter(F.col("__r") <= 4)
-        .select("query_id", "centroid_id", F.lit(True).alias("__probed"))
-    )
-    routed_ok = (
-        res.join(indexed.select("vec_id", "centroid_id"), "vec_id")
-        .join(probes, ["query_id", "centroid_id"], "left")
-        .groupBy("query_id")
-        .agg(
-            F.min(F.coalesce("__probed", F.lit(False))).alias(
-                "routed_from_probed_lists"
-            )
-        )
-    )
-    score_ok = (
-        res.join(queries, "query_id")
-        .join(e.select("vec_id", "embedding"), "vec_id")
-        .select(
-            "query_id",
-            (
-                F.round(
-                    cosine_similarity(F.col("query_vec"), F.col("embedding")), 6
-                )
-                == F.col("score")
-            ).alias("__ok"),
-        )
-        .groupBy("query_id")
-        .agg(F.min("__ok").alias("score_is_exact_cosine"))
-    )
-    stats = (
-        F.broadcast(queries)
-        .crossJoin(e.select("vec_id", "embedding"))
-        .select(
-            "query_id",
-            "vec_id",
-            cosine_similarity(F.col("query_vec"), F.col("embedding")).alias("__cos"),
-        )
-        .groupBy("query_id")
-        .agg(
-            F.round(
-                F.max(F.when(F.col("vec_id") != F.col("query_id"), F.col("__cos"))),
-                6,
-            ).alias("exact_max_nonself"),
-            F.max("__cos").alias("__max_all"),
-        )
-    )
-    top1 = res.filter(F.col("rank") == 1).select(
-        "query_id", F.col("score").alias("__top1")
-    )
-    counts = res.groupBy("query_id").agg(F.count(F.lit(1)).alias("__n"))
-    return (
-        counts.join(stats, "query_id")
-        .join(routed_ok, "query_id")
-        .join(score_ok, "query_id")
-        .join(top1, "query_id")
-        .select(
-            "query_id",
-            "exact_max_nonself",
-            "routed_from_probed_lists",
-            "score_is_exact_cosine",
-            (F.col("__top1") <= F.col("__max_all") + F.lit(1e-6)).alias(
-                "top1_bounded"
-            ),
-            (F.col("__n") >= 1).alias("nonempty"),
-        )
-    )
+    return _ivf_contract(e, centroids, assign_centroids(e, centroids))
 
 
 @register(
@@ -2341,18 +2217,7 @@ def d3_source_priority_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "u7_pq_adc_topk",
     "U7 ⊕ (product quantization + ADC + exact re-rank)",
-    f"""
-    SELECT q.vec_id AS query_id,
-           CAST(5 AS BIGINT) AS n_results,
-           round(max(CASE WHEN c.vec_id != q.vec_id THEN
-             {SQL_COSINE.format(a='q.embedding', b='c.embedding')} END), 6)
-             AS exact_max_nonself,
-           TRUE AS adc_matches_recon,
-           TRUE AS top1_bounded
-    FROM (SELECT * FROM embeddings WHERE vec_id < 5) q
-    CROSS JOIN embeddings c
-    GROUP BY q.vec_id
-    """,
+    _sql_exact_max_nonself(5, "adc_matches_recon", "top1_bounded", head=True),
     doc="Two-tier billion-vector ANN layout (Jégou et al., TPAMI 2011): "
     "per-subspace k-means codebooks compress each vector to m small "
     "codes; the corpus-wide scan scores by asymmetric distance "
@@ -2375,7 +2240,6 @@ def d3_source_priority_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     "Recall and determinism stay pinned in tests/test_similarity.py.",
 )
 def u7_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.arrays import cosine_similarity, l2_norm
     from ..operators.similarity import (
         _codebooks_lit,
         pq_encode,
@@ -2384,20 +2248,10 @@ def u7_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = _t(spark, sf_dir, "embeddings")["embeddings"]
-    from .cache_registry import track
-
-    unit = track(emb.select(
-        "vec_id",
-        F.transform(
-            F.col("embedding").cast("array<double>"),
-            lambda x: x / l2_norm(F.col("embedding").cast("array<double>")),
-        ).alias("embedding"),
-    ))  # plan-level persist owned by the cache registry
+    unit = _unit_embeddings(emb)
     books = pq_train(unit, m=16, k=32, iterations=2)
     encoded = pq_encode(unit, books)
-    queries = unit.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
+    queries = _query_set(unit, 5)
     res = pq_topk(
         queries, encoded, books, k=5, rerank_corpus=unit, rerank_factor=4
     )
@@ -2429,46 +2283,20 @@ def u7_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("query_id")
         .agg(F.min("__ok").alias("adc_matches_recon"))
     )
-
-    # Exact per-query stats on the RAW embeddings (what the oracle
-    # computes): max cosine to a non-self row, and the whole-corpus max
-    # bounding the reranked top-1.
-    raw_q = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
+    # exact stats on the RAW embeddings (what the oracle computes)
+    stats = _nonself_stats(
+        _raw_cosine(emb, _query_set(emb, 5)), "__cos", "exact_max_nonself"
     )
-    stats = (
-        F.broadcast(raw_q)
-        .crossJoin(emb.select("vec_id", "embedding"))
-        .select(
-            "query_id",
-            "vec_id",
-            cosine_similarity(F.col("qv"), F.col("embedding")).alias("__cos"),
-        )
-        .groupBy("query_id")
-        .agg(
-            F.round(
-                F.max(F.when(F.col("vec_id") != F.col("query_id"), F.col("__cos"))),
-                6,
-            ).alias("exact_max_nonself"),
-            F.max("__cos").alias("__max_all"),
-        )
-    )
-    top1 = res.filter(F.col("rank") == 1).select(
-        "query_id", F.col("score").alias("__top1")
-    )
-    counts = res.groupBy("query_id").agg(F.count(F.lit(1)).alias("n_results"))
     return (
-        counts.join(stats, "query_id")
+        _top1_count(res, "score", "n_results")
+        .join(stats, "query_id")
         .join(identity, "query_id")
-        .join(top1, "query_id")
         .select(
             "query_id",
             "n_results",
             "exact_max_nonself",
             "adc_matches_recon",
-            (F.col("__top1") <= F.col("__max_all") + F.lit(1e-6)).alias(
-                "top1_bounded"
-            ),
+            _top1_bounded(),
         )
     )
 
@@ -2476,19 +2304,13 @@ def u7_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "u7_ivfpq_topk",
     "U7 ⊕ (IVF-PQ composed ANN layout)",
-    f"""
-    SELECT q.vec_id AS query_id,
-           CAST(5 AS BIGINT) AS n_results,
-           round(max(CASE WHEN c.vec_id != q.vec_id THEN
-             {SQL_COSINE.format(a='q.embedding', b='c.embedding')} END), 6)
-             AS exact_max_nonself,
-           TRUE AS routed_from_probed_lists,
-           TRUE AS rerank_is_exact_cosine,
-           TRUE AS top1_bounded
-    FROM (SELECT * FROM embeddings WHERE vec_id < 5) q
-    CROSS JOIN embeddings c
-    GROUP BY q.vec_id
-    """,
+    _sql_exact_max_nonself(
+        5,
+        "routed_from_probed_lists",
+        "rerank_is_exact_cosine",
+        "top1_bounded",
+        head=True,
+    ),
     doc="IVF-PQ, the composed billion-vector layout: IVF centroid "
     "routing bounds WHICH rows each query touches (equi-join on the "
     "nprobe nearest lists), PQ codes bound the COST per touched row "
@@ -2508,89 +2330,22 @@ def u7_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     "precedent). Recall stays pinned in tests/test_similarity.py.",
 )
 def u7_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    from ..functions.arrays import cosine_similarity, l2_norm
-    from ..operators.similarity import (
-        assign_centroids,
-        ivfpq_topk,
-        pq_encode,
-        pq_train,
-        sample_centroids,
-    )
+    from ..operators.similarity import ivfpq_topk, pq_encode, pq_train
 
     emb = _t(spark, sf_dir, "embeddings")["embeddings"]
-    from .cache_registry import track
-
-    unit = track(emb.select(
-        "vec_id",
-        F.transform(
-            F.col("embedding").cast("array<double>"),
-            lambda x: x / l2_norm(F.col("embedding").cast("array<double>")),
-        ).alias("embedding"),
-    ))  # plan-level persist owned by the cache registry
+    unit = _unit_embeddings(emb)
     centroids = sample_centroids(unit, num_centroids=8)
     indexed = assign_centroids(unit, centroids)
     books = pq_train(unit, m=16, k=32, iterations=2)
     encoded = pq_encode(unit, books)
-    queries = unit.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
+    queries = _query_set(unit, 5)
     res = ivfpq_topk(
         queries, indexed, centroids, encoded, books, k=5, nprobe=6, rerank_factor=4
     )
 
-    # Mirror of the probe selection (ivfpq_topk's q_probe/wq): the
-    # nprobe nearest centroid ids per query, for the routing check.
-    wq = Window.partitionBy("query_id").orderBy(
-        F.desc("c_score"), F.asc("centroid_id")
-    )
-    probes = (
-        F.broadcast(queries)
-        .crossJoin(F.broadcast(centroids))
-        .select(
-            "query_id",
-            "centroid_id",
-            cosine_similarity(F.col("query_vec"), F.col("centroid_vec")).alias(
-                "c_score"
-            ),
-        )
-        .withColumn("__r", F.row_number().over(wq))
-        .filter(F.col("__r") <= 6)
-        .select("query_id", "centroid_id", F.lit(True).alias("__probed"))
-    )
-    routed_ok = (
-        res.join(indexed.select("vec_id", "centroid_id"), "vec_id")
-        .join(probes, ["query_id", "centroid_id"], "left")
-        .groupBy("query_id")
-        .agg(
-            F.min(F.coalesce("__probed", F.lit(False))).alias(
-                "routed_from_probed_lists"
-            )
-        )
-    )
-
     # Exact per-query stats + independent re-rank verification on the
     # RAW embeddings (cosine is normalization-invariant).
-    raw_q = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
-    )
-    pairwise = (
-        F.broadcast(raw_q)
-        .crossJoin(emb.select("vec_id", "embedding"))
-        .select(
-            "query_id",
-            "vec_id",
-            cosine_similarity(F.col("qv"), F.col("embedding")).alias("__cos"),
-        )
-    )
-    stats = pairwise.groupBy("query_id").agg(
-        F.round(
-            F.max(F.when(F.col("vec_id") != F.col("query_id"), F.col("__cos"))),
-            6,
-        ).alias("exact_max_nonself"),
-        F.max("__cos").alias("__max_all"),
-    )
+    pairwise = _raw_cosine(emb, _query_set(emb, 5))
     rerank_ok = (
         res.join(pairwise, ["query_id", "vec_id"])
         .groupBy("query_id")
@@ -2603,17 +2358,15 @@ def u7_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return (
-        rerank_ok.join(stats, "query_id")
-        .join(routed_ok, "query_id")
+        rerank_ok.join(_nonself_stats(pairwise, "__cos", "exact_max_nonself"), "query_id")
+        .join(_routed_ok(res, indexed, queries, centroids, nprobe=6), "query_id")
         .select(
             "query_id",
             "n_results",
             "exact_max_nonself",
             "routed_from_probed_lists",
             "rerank_is_exact_cosine",
-            (F.col("__top1") <= F.col("__max_all") + F.lit(1e-6)).alias(
-                "top1_bounded"
-            ),
+            _top1_bounded(),
         )
     )
 
@@ -3169,16 +2922,12 @@ def u9_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     "tests/test_similarity.py.",
 )
 def u7_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.similarity import brute_force_topk, mmr_rerank
+    from ..operators.similarity import mmr_rerank
 
     e = _t(spark, sf_dir, "embeddings")["embeddings"]
-    queries = e.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
+    cands = brute_force_topk(_query_set(e, 8), e, k=30).join(
+        e.select("vec_id", "embedding"), "vec_id"
     )
-    cands = brute_force_topk(
-        queries, e, query_id="query_id", corpus_id="vec_id",
-        query_vec="query_vec", corpus_vec="embedding", k=30, metric="cosine",
-    ).join(e.select("vec_id", "embedding"), "vec_id")
     picked = mmr_rerank(cands, k=10, lam=0.7)
     per_pick = picked.join(
         cands.select("query_id", "vec_id", F.lit(True).alias("__is_cand")),
@@ -3947,11 +3696,8 @@ def u7_int8_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.similarity import int8_topk
 
     e = _t(spark, sf_dir, "embeddings")["embeddings"]
-    queries = e.filter(F.col("vec_id") < 4).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
     return int8_topk(
-        queries,
+        _query_set(e, 4),
         e,
         query_id="query_id",
         corpus_id="vec_id",
@@ -4114,57 +3860,13 @@ def d3_simhash_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     "operators/similarity.py::ivf_int8_topk.",
 )
 def u7_ivf_int8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    from ..functions.arrays import cosine_similarity
     from ..operators.similarity import int8_quantize, ivf_int8_topk
 
     e = _t(spark, sf_dir, "embeddings")["embeddings"]
     centroids = sample_centroids(e, num_centroids=16)
-    queries = e.filter(F.col("vec_id") < 4).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    res = ivf_int8_topk(
-        queries,
-        e,
-        centroids,
-        query_id="query_id",
-        corpus_id="vec_id",
-        query_vec="query_vec",
-        corpus_vec="embedding",
-        k=10,
-        nprobe=4,
-    )
-
-    # probe mirror (same centroids frame) for the routing check
-    wq = Window.partitionBy("query_id").orderBy(
-        F.desc("c_score"), F.asc("centroid_id")
-    )
-    probes = (
-        F.broadcast(queries)
-        .crossJoin(F.broadcast(centroids))
-        .select(
-            "query_id",
-            "centroid_id",
-            cosine_similarity(F.col("query_vec"), F.col("centroid_vec")).alias(
-                "c_score"
-            ),
-        )
-        .withColumn("__r", F.row_number().over(wq))
-        .filter(F.col("__r") <= 4)
-        .select("query_id", "centroid_id", F.lit(True).alias("__probed"))
-    )
-    indexed = assign_centroids(e, centroids)
-    routed_ok = (
-        res.join(indexed.select("vec_id", "centroid_id"), "vec_id")
-        .join(probes, ["query_id", "centroid_id"], "left")
-        .groupBy("query_id")
-        .agg(
-            F.min(F.coalesce("__probed", F.lit(False))).alias(
-                "routed_from_probed_lists"
-            )
-        )
-    )
+    queries = _query_set(e, 4)
+    res = ivf_int8_topk(queries, e, centroids, k=10, nprobe=4)
+    routed_ok = _routed_ok(res, assign_centroids(e, centroids), queries, centroids, nprobe=4)
     # independent quantized-cosine recheck + brute-force quantized max
     cz = int8_quantize(e, "embedding", out_q="__cq", out_norm2="__cn2").select(
         "vec_id", "__cq", "__cn2"
@@ -4201,35 +3903,17 @@ def u7_ivf_int8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("query_id")
         .agg(F.min("__ok").alias("rerank_is_exact_qcos"))
     )
-    stats = (
-        all_scored.groupBy("query_id")
-        .agg(
-            F.round(
-                F.max(
-                    F.when(F.col("vec_id") != F.col("query_id"), F.col("__qcos"))
-                ),
-                6,
-            ).alias("exact_max_qcos_nonself"),
-            F.max("__qcos").alias("__max_all"),
-        )
-    )
-    top1 = res.filter(F.col("rank") == 1).select(
-        "query_id", F.col("qcos").alias("__top1")
-    )
-    counts = res.groupBy("query_id").agg(F.count(F.lit(1)).alias("__n"))
     return (
-        counts.join(stats, "query_id")
+        _top1_count(res, "qcos", "__n")
+        .join(_nonself_stats(all_scored, "__qcos", "exact_max_qcos_nonself"), "query_id")
         .join(routed_ok, "query_id")
         .join(score_ok, "query_id")
-        .join(top1, "query_id")
         .select(
             "query_id",
             "exact_max_qcos_nonself",
             "routed_from_probed_lists",
             "rerank_is_exact_qcos",
-            (F.col("__top1") <= F.col("__max_all") + F.lit(1e-6)).alias(
-                "top1_bounded"
-            ),
+            _top1_bounded(),
             (F.col("__n") >= 1).alias("nonempty"),
         )
     )

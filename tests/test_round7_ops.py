@@ -1,43 +1,12 @@
 """Semantic invariants for the round-7 operators, beyond their oracle
-checks: hard-negative exclusion, resample interpolation on a hand-built
-series, rolling-median frame semantics, Spearman edge values, MAD
-robustness, salted-join result equality under a hot key."""
+checks: resample interpolation on a hand-built series, rolling-median
+frame semantics, Spearman edge values, MAD robustness, salted-join
+result equality under a hot key."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
-
-
-def test_hard_negatives_exclude_dups_and_self(spark):
-    from praw_etl_student_dropout_spark.operators.similarity import (
-        hard_negative_topk,
-    )
-
-    # corpus: query 0's exact duplicate (id 10), a near-dup (id 11), and
-    # progressively-less-similar vectors
-    rows = [
-        (0, [1.0, 0.0, 0.0]),
-        (10, [1.0, 0.0, 0.0]),          # exact dup -> excluded
-        (11, [0.999, 0.04, 0.0]),       # cosine ~0.999 -> excluded
-        (12, [0.9, 0.43, 0.0]),         # hard negative
-        (13, [0.5, 0.86, 0.0]),         # medium
-        (14, [0.0, 1.0, 0.0]),          # easy
-    ]
-    corpus = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    q = corpus.filter(F.col("vec_id") == 0).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    out = hard_negative_topk(
-        q, corpus, k=3, dup_threshold=0.95, corpus_vec="embedding"
-    ).collect()
-    ids = [r.vec_id for r in sorted(out, key=lambda r: r.rank)]
-    assert ids == [12, 13, 14]
-    assert all(r.score < 0.95 for r in out)
-    assert all(r.vec_id != 0 for r in out)
-    # ranks descend with score
-    scores = [r.score for r in sorted(out, key=lambda r: r.rank)]
-    assert scores == sorted(scores, reverse=True)
 
 
 def test_resample_interp_hand_series(spark, sf_dir):

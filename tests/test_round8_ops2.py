@@ -1,24 +1,18 @@
-"""Invariant tests for the round-8 additions a50_survival_km,
-a51_bootstrap_ci, and the int8 scalar-quantization retrieval rung
-(operators/similarity.py::int8_quantize/int8_topk, u7_int8_ann).
+"""Invariant tests for a50_survival_km, a51_bootstrap_ci, the PageRank
+fixed-round path, SimHash-md5 banding, skyline and JSON quarantine.
 
 The full-value differential proof lives in the oracle entries; these
 pin the operator-level contracts a value hash can't express: KM
-risk-set accounting, bootstrap determinism/coverage, quantization
-bounds and cosine fidelity.
+risk-set accounting, bootstrap determinism/coverage, banding
+losslessness.
 """
 
 from __future__ import annotations
 
 import datetime
-import math
 
 from pyspark.sql import functions as F
 
-from praw_etl_student_dropout_spark.operators.similarity import (
-    int8_quantize,
-    int8_topk,
-)
 from praw_etl_student_dropout_spark.plans import catalog_all
 
 from tests.conftest import SF_DIR
@@ -91,63 +85,6 @@ def test_bootstrap_ci_deterministic_and_brackets_mean(spark):
     assert a["b_replicates"] == 32
     assert a["ci_lo"] <= a["ci_hi"]
     assert a["ci_lo"] <= a["mean_full"] <= a["ci_hi"]
-
-
-def test_int8_quantize_bounds_and_norm(spark):
-    vecs = spark.createDataFrame(
-        [
-            (1, [0.5, -1.0, 0.25, 0.0]),
-            (2, [3.0, 3.0, -3.0, 1.5]),
-            (3, [0.0, 0.0, 0.0, 0.0]),  # zero vector: dropped
-        ],
-        "vec_id long, embedding array<float>",
-    )
-    out = {r["vec_id"]: r for r in int8_quantize(vecs, "embedding").collect()}
-    assert set(out) == {1, 2}  # zero vector dropped
-    for r in out.values():
-        assert all(-127 <= q <= 127 for q in r["qvec"])
-        assert max(abs(q) for q in r["qvec"]) == 127  # scale hits the max coord
-        assert r["qnorm2"] == sum(q * q for q in r["qvec"])
-    assert out[1]["qvec"] == [64, -127, 32, 0]  # round(0.5*127), ...
-    assert out[2]["qvec"] == [127, 127, -127, 64]  # round(1.5*127/3)=round(63.5)=64
-
-
-def test_int8_topk_tracks_exact_cosine(spark, sf_dir):
-    """Quantized cosine stays within 0.05 of true cosine on the 64-dim
-    fixture embeddings, and the top-1 neighbor by quantized score is
-    inside the exact top-3 for every query (SQ8's retrieval contract:
-    near-lossless at this dimensionality)."""
-    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    queries = e.filter(F.col("vec_id") < 4).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    got = int8_topk(
-        queries, e, query_id="query_id", corpus_id="vec_id",
-        query_vec="query_vec", corpus_vec="embedding", k=5,
-    ).collect()
-    vecs = {r["vec_id"]: r["embedding"] for r in e.collect()}
-
-    def cos(a, b):
-        dot = sum(x * y for x, y in zip(a, b))
-        return dot / (
-            math.sqrt(sum(x * x for x in a)) * math.sqrt(sum(y * y for y in b))
-        )
-
-    by_q: dict[int, list] = {}
-    for r in got:
-        by_q.setdefault(r["query_id"], []).append(r)
-        assert abs(r["qcos"] - cos(vecs[r["query_id"]], vecs[r["vec_id"]])) < 0.05
-    for qid, rows in by_q.items():
-        assert [r["rank"] for r in sorted(rows, key=lambda r: r["rank"])] == list(
-            range(1, 6)
-        )
-        exact = sorted(
-            ((cos(vecs[qid], v), vid) for vid, v in vecs.items() if vid != qid),
-            reverse=True,
-        )
-        top3_exact = {vid for _, vid in exact[:3]}
-        top1_quant = next(r["vec_id"] for r in rows if r["rank"] == 1)
-        assert top1_quant in top3_exact
 
 
 def test_pagerank_fixed_round_path_matches_tol_path(spark):

@@ -1,16 +1,28 @@
 """Similarity-search invariants: brute-force agrees with numpy; IVF
-recall against brute force; dot-product expression correctness."""
+recall against brute force; dot-product expression correctness; every
+ANN operator's shared top-k stage (dense ranks, id-ascending ties);
+hard-negative exclusion; int8 quantization bounds and cosine fidelity."""
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from praw_etl_student_dropout_spark.functions.arrays import cosine_similarity, dot_product
 from praw_etl_student_dropout_spark.operators.similarity import (
     assign_centroids,
     brute_force_topk,
+    hard_negative_topk,
+    int8_quantize,
+    int8_topk,
+    ivf_int8_topk,
     ivf_topk,
+    ivfpq_topk,
+    pq_encode,
+    pq_topk,
     sample_centroids,
 )
 from praw_etl_student_dropout_spark.sources.readers import load_tables
@@ -453,3 +465,150 @@ def test_ivf_int8_recall_tracks_raw_ivf(spark, sf_dir):
     # to differ across runs — determinism probe
     again = ivf_int8_topk(queries, e, centroids, k=10, nprobe=8).collect()
     assert {tuple(r) for r in approx} == {tuple(r) for r in again}
+
+# m=2 subspaces of 2 dims, 2 centroids each: tiny hand-built PQ codebooks
+_TIE_BOOKS = [[[1.0, 0.0], [0.6, 0.8]], [[0.0, 0.0], [1.0, 0.0]]]
+_TIE_TOPK = {
+    "brute_force_topk": lambda q, c, cents: brute_force_topk(q, c, k=10),
+    "hard_negative_topk": lambda q, c, cents: hard_negative_topk(q, c, k=10),
+    "ivf_topk": lambda q, c, cents: ivf_topk(
+        q, assign_centroids(c, cents), cents, k=10, nprobe=2
+    ),
+    "pq_topk": lambda q, c, cents: pq_topk(q, pq_encode(c, _TIE_BOOKS), _TIE_BOOKS, k=10),
+    "ivfpq_topk": lambda q, c, cents: ivfpq_topk(
+        q, assign_centroids(c, cents), cents, pq_encode(c, _TIE_BOOKS), _TIE_BOOKS,
+        k=10, nprobe=2,
+    ),
+    "int8_topk": lambda q, c, cents: int8_topk(
+        q, c, query_id="query_id", corpus_id="vec_id",
+        query_vec="query_vec", corpus_vec="embedding", k=10,
+    ),
+    "ivf_int8_topk": lambda q, c, cents: ivf_int8_topk(q, c, cents, k=10, nprobe=2),
+}
+
+
+@pytest.mark.parametrize("op", list(_TIE_TOPK))
+def test_topk_ranks_dense_and_ties_order_by_id(spark, op):
+    """Every ANN operator ends in the same per-query top-k stage: ranks
+    are exactly 1..n per query, and equal scores order by corpus id
+    ascending. Duplicated corpus vectors make scores tie exactly."""
+    corpus = spark.createDataFrame(
+        [
+            (1, [1.0, 0.0, 0.0, 0.0]),
+            (2, [0.6, 0.8, 0.0, 0.0]),
+            (3, [1.0, 0.0, 0.0, 0.0]),
+            (4, [0.6, 0.8, 0.0, 0.0]),
+            (5, [0.0, 0.0, 1.0, 0.0]),
+            (6, [1.0, 0.0, 0.0, 0.0]),
+        ],
+        "vec_id long, embedding array<double>",
+    )
+    queries = spark.createDataFrame(
+        [(100, [1.0, 0.2, 0.0, 0.0]), (101, [0.0, 0.0, 1.0, 0.5])],
+        "query_id long, query_vec array<double>",
+    )
+    cents = spark.createDataFrame(
+        [(0, [1.0, 0.0, 0.0, 0.0]), (1, [0.0, 0.0, 1.0, 0.0])],
+        "centroid_id int, centroid_vec array<double>",
+    )
+    score = "qcos" if "int8" in op else "score"
+    by_q: dict[int, list] = {}
+    for r in _TIE_TOPK[op](queries, corpus, cents).collect():
+        by_q.setdefault(r["query_id"], []).append((r["rank"], r[score], r["vec_id"]))
+    assert set(by_q) == {100, 101}
+    ties = 0
+    for qid, got in by_q.items():
+        got.sort()
+        assert [rank for rank, _, _ in got] == list(range(1, len(got) + 1)), got
+        for (_, s1, id1), (_, s2, id2) in zip(got, got[1:]):
+            assert s1 > s2 or (s1 == s2 and id1 < id2), (qid, got)
+            ties += s1 == s2
+    assert ties, "the fixture must produce tied scores"
+
+
+def test_hard_negatives_exclude_dups_and_self(spark):
+    from praw_etl_student_dropout_spark.operators.similarity import (
+        hard_negative_topk,
+    )
+
+    # corpus: query 0's exact duplicate (id 10), a near-dup (id 11), and
+    # progressively-less-similar vectors
+    rows = [
+        (0, [1.0, 0.0, 0.0]),
+        (10, [1.0, 0.0, 0.0]),          # exact dup -> excluded
+        (11, [0.999, 0.04, 0.0]),       # cosine ~0.999 -> excluded
+        (12, [0.9, 0.43, 0.0]),         # hard negative
+        (13, [0.5, 0.86, 0.0]),         # medium
+        (14, [0.0, 1.0, 0.0]),          # easy
+    ]
+    corpus = spark.createDataFrame(rows, ["vec_id", "embedding"])
+    q = corpus.filter(F.col("vec_id") == 0).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
+    )
+    out = hard_negative_topk(
+        q, corpus, k=3, dup_threshold=0.95, corpus_vec="embedding"
+    ).collect()
+    ids = [r.vec_id for r in sorted(out, key=lambda r: r.rank)]
+    assert ids == [12, 13, 14]
+    assert all(r.score < 0.95 for r in out)
+    assert all(r.vec_id != 0 for r in out)
+    # ranks descend with score
+    scores = [r.score for r in sorted(out, key=lambda r: r.rank)]
+    assert scores == sorted(scores, reverse=True)
+
+
+def test_int8_quantize_bounds_and_norm(spark):
+    vecs = spark.createDataFrame(
+        [
+            (1, [0.5, -1.0, 0.25, 0.0]),
+            (2, [3.0, 3.0, -3.0, 1.5]),
+            (3, [0.0, 0.0, 0.0, 0.0]),  # zero vector: dropped
+        ],
+        "vec_id long, embedding array<float>",
+    )
+    out = {r["vec_id"]: r for r in int8_quantize(vecs, "embedding").collect()}
+    assert set(out) == {1, 2}  # zero vector dropped
+    for r in out.values():
+        assert all(-127 <= q <= 127 for q in r["qvec"])
+        assert max(abs(q) for q in r["qvec"]) == 127  # scale hits the max coord
+        assert r["qnorm2"] == sum(q * q for q in r["qvec"])
+    assert out[1]["qvec"] == [64, -127, 32, 0]  # round(0.5*127), ...
+    assert out[2]["qvec"] == [127, 127, -127, 64]  # round(1.5*127/3)=round(63.5)=64
+
+
+def test_int8_topk_tracks_exact_cosine(spark, sf_dir):
+    """Quantized cosine stays within 0.05 of true cosine on the 64-dim
+    fixture embeddings, and the top-1 neighbor by quantized score is
+    inside the exact top-3 for every query (SQ8's retrieval contract:
+    near-lossless at this dimensionality)."""
+    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    queries = e.filter(F.col("vec_id") < 4).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
+    )
+    got = int8_topk(
+        queries, e, query_id="query_id", corpus_id="vec_id",
+        query_vec="query_vec", corpus_vec="embedding", k=5,
+    ).collect()
+    vecs = {r["vec_id"]: r["embedding"] for r in e.collect()}
+
+    def cos(a, b):
+        dot = sum(x * y for x, y in zip(a, b))
+        return dot / (
+            math.sqrt(sum(x * x for x in a)) * math.sqrt(sum(y * y for y in b))
+        )
+
+    by_q: dict[int, list] = {}
+    for r in got:
+        by_q.setdefault(r["query_id"], []).append(r)
+        assert abs(r["qcos"] - cos(vecs[r["query_id"]], vecs[r["vec_id"]])) < 0.05
+    for qid, rows in by_q.items():
+        assert [r["rank"] for r in sorted(rows, key=lambda r: r["rank"])] == list(
+            range(1, 6)
+        )
+        exact = sorted(
+            ((cos(vecs[qid], v), vid) for vid, v in vecs.items() if vid != qid),
+            reverse=True,
+        )
+        top3_exact = {vid for _, vid in exact[:3]}
+        top1_quant = next(r["vec_id"] for r in rows if r["rank"] == 1)
+        assert top1_quant in top3_exact
